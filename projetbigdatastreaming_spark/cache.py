@@ -1,104 +1,90 @@
-"""Scoped persist — cache entries keyed by call site, scoped to the
-latest invocation.
+"""Scoped persist: one cache entry per call-site key, filled eagerly
+and kept until the next call under the same key replaces it.
 
-``persist_scoped(key, df)`` persists ``df`` after unpersisting the
-PREVIOUS relation registered under ``key``: repeated invocations of
-the same site (bench warm + min-of-3 timed runs, correctness sweeps
-over several sf dirs, every micro-batch of a long-running stream)
-keep session cache usage O(1) per site instead of accumulating one
-entry per distinct plan until the ContextCleaner happens to GC them
-(round-7 ADVICE on ``q_emb_pq_recall``; round-8 ADVICE on
-``bq_adc_search`` inside ``bq_ann_ingest_writer``).
+Contract of ``persist_scoped(key, df, memoize=False)``:
 
-The current invocation's cache must outlive the call — the returned
-plan is materialized later by the caller — which is why the scope is
-previous-invocation, not try/finally.
+* **Eager fill.**  Every call persists ``df`` and fills it with one
+  action before it returns.  A lazily persisted relation with several
+  consumers (both sides of a self-join, a loop round read twice) is
+  otherwise filled by whichever consumer reaches a partition first,
+  and the racing consumers recompute the lineage concurrently.
 
-Semantic memoization (``memoize=True``, OPT-IN): when the new
-invocation's plan is ``sameSemantics`` as the cached one (same
-inputs, same params — e.g. a search re-run against the same built
-index), the EXISTING cached relation is returned instead of evicting
-and recomputing; only a semantically different plan (other sf dir,
-new model params) evicts.  Without this, re-invoking a site paid
-full recomputation every time — the r09 sf10 profile of
-``bq_ivfpq_rerank_topk``: the index relations' lineage is ~4 corpus
-passes, so each re-search re-trained the whole index.
+* **Scope.**  The relation outlives the call, because the caller
+  materializes the returned plan later.  It is freed by the next call
+  under the same key (or by ``clear_scoped``), so repeated calls of a
+  site (timed re-runs, sweeps over several inputs, every micro-batch
+  of a stream) hold one entry per key instead of one per invocation.
 
-Memoize ONLY relations derived from immutable inputs (fixture
-parquet, a frozen model).  A plan that re-reads a MUTABLE path
-(streaming state dirs rewritten between micro-batches) is
-sameSemantics across rewrites while its data changed — memoizing it
-would serve stale state; such sites keep the default evict-always
-behavior."""
+* **Same plan.**  When the entry under ``key`` is ``sameSemantics``
+  with ``df``, it is unpersisted *before* ``df`` is persisted.
+  Spark's CacheManager keys entries by canonicalized plan, so the two
+  share one entry; unpersisting the old handle after persisting the
+  new one would remove the new call's own cache.  For the same
+  reason a plan must be cached under ONE key: two keys holding the
+  same plan share an entry, and replacing one key kills the other.
+
+* **Different plan.**  ``df`` is persisted and filled first, and only
+  then is the old entry unpersisted.  A loop round built from the
+  previous round (``persist_scoped(k, step(persist_scoped(k, ...)))``)
+  therefore fills from a live cache; Spark keeps an already-filled
+  dependent when the entry it was built from is uncached.
+
+* **memoize.**  With ``memoize=True`` a same-plan call returns the
+  cached entry instead of recomputing it.  Use it only for relations
+  derived from immutable inputs (fixture parquet, a frozen model): a
+  plan over a path rewritten between calls (streaming state) stays
+  ``sameSemantics`` while its data changes, and would serve stale
+  rows.
+"""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: per-site scoped persist state
+#: key -> the relation currently cached under it
 _SCOPED_PERSISTS: dict[str, DataFrame] = {}
 
 
+def _unpersist(df: DataFrame, blocking: bool = False) -> None:
+    try:
+        df.unpersist(blocking=blocking)
+    except Exception:
+        pass  # the session may have restarted; a stale handle is inert
+
+
+def _same_plan(a: DataFrame, b: DataFrame) -> bool:
+    try:
+        return a.sameSemantics(b)
+    except Exception:
+        return False
+
+
 def clear_scoped() -> int:
-    """Unpersist every scoped cache entry (returns how many).  Called
-    by bench.py between scale sweeps so one scale point's memoized
-    index relations can't occupy executor memory — and skew page-cache
-    behavior — while another scale's queries are being timed."""
+    """Unpersist every scoped cache entry and return how many there
+    were (used between scale sweeps so one scale's caches don't occupy
+    executor memory while another scale is timed)."""
     n = 0
-    for key in list(_SCOPED_PERSISTS):
-        prev = _SCOPED_PERSISTS.pop(key, None)
-        if prev is not None:
-            try:
-                prev.unpersist(blocking=True)
-            except Exception:
-                pass
-            n += 1
+    while _SCOPED_PERSISTS:
+        _unpersist(_SCOPED_PERSISTS.popitem()[1], blocking=True)
+        n += 1
     return n
 
 
-def evict_scoped(key: str) -> None:
-    """Unpersist and forget the relation registered under ``key`` (if
-    any) — the START-OF-INVOCATION twin of ``register_scoped``.
-
-    Round 15: Spark's CacheManager keys cache entries by CANONICALIZED
-    PLAN, so unpersisting the previous invocation's relation removes
-    the entry of ANY canonically-identical plan — including one this
-    invocation just persisted and materialized.  A site whose relation
-    is persisted mid-computation (an iterative loop's final round)
-    therefore must evict the PREVIOUS invocation's relation BEFORE it
-    persists anything of its own: the r15 graph_kcore bug was exactly
-    this — registering the final peel relation at the end evicted the
-    just-filled cache (prior round's plan is canonically identical
-    across invocations), and the returned plan recomputed the whole
-    pipeline through dead caches (83 s vs 35 s per bench run at
-    sf10)."""
-    prev = _SCOPED_PERSISTS.pop(key, None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass
-
-
-def register_scoped(key: str, df: DataFrame) -> DataFrame:
-    """Track an ALREADY-PERSISTED relation under ``key`` so a later
-    ``evict_scoped``/``persist_scoped`` on the key frees it.  Unlike
-    ``persist_scoped`` it neither unpersists the previous entry (the
-    caller must have evicted it up front — see ``evict_scoped``) nor
-    re-persists ``df``."""
-    _SCOPED_PERSISTS[key] = df
-    return df
-
-
 def persist_scoped(key: str, df: DataFrame, memoize: bool = False) -> DataFrame:
-    prev = _SCOPED_PERSISTS.get(key)
-    if prev is not None:
-        try:
-            if memoize and prev.sameSemantics(df):
-                return prev
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass  # session may have restarted; stale handle is inert
-        _SCOPED_PERSISTS.pop(key, None)
+    """Cache ``df`` under ``key``, fill it, and free the key's previous
+    entry in the order the module docstring gives.  Returns the cached
+    relation: ``df`` itself, or the earlier entry on a memoized hit."""
+    prev = _SCOPED_PERSISTS.pop(key, None)
+    if prev is not None and _same_plan(prev, df):
+        if memoize:
+            _SCOPED_PERSISTS[key] = prev
+            return prev
+        _unpersist(prev)
+        prev = None
     _SCOPED_PERSISTS[key] = df.persist()
+    try:
+        df.count()
+    finally:
+        if prev is not None:
+            _unpersist(prev)
     return df

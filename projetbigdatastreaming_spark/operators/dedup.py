@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import persist_scoped
 from ..catalog import spread
 from ..functions.text import fingerprint, word_shingles
 
@@ -306,7 +307,7 @@ def jaccard_verify(
 
 
 def minhash_near_duplicates(
-    docs: DataFrame, threshold: float = 0.8, cache_signatures: bool = True
+    docs: DataFrame, threshold: float = 0.8
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup pairs, exact-verified.
 
@@ -315,40 +316,17 @@ def minhash_near_duplicates(
     miss probability at j≥0.9) this equals the brute-force all-pairs
     answer the oracle computes.
 
-    Round 14: the cached relation is the SHINGLE relation — it feeds
-    the signature aggregate and both sides of the verify join; the
-    signature pass itself is the codegen ``minhash_signatures``
-    explode+agg (see its docstring for the measured win over the
-    interpreted HOF fold it replaces) and stays lazy on top of the
-    cache.  Round 15: the cached relation is the HASH-space shingle
-    relation (``shingle_hash_rel``, ~0.9 KB/doc of longs vs ~3 KB of
-    strings) and the spread is keyed on doc_id (no round-robin
-    pre-sort of the corpus text) — so the relation caches even at
-    billions of documents (MEMORY_AND_DISK spills gracefully).
+    The one cached relation is the hash-space shingle relation
+    (``shingle_hash_rel``, ~0.9 KB/doc of longs), spread on doc_id so
+    it caches even at billions of documents (MEMORY_AND_DISK spills).
+    It feeds the signature aggregate and both sides of the verify
+    join; the signatures stay lazy codegen on top of it, because a
+    second cache level measured slower than the one extra signature
+    aggregate the band join's two sides pay.
     """
-    sh = shingle_hash_rel(spread(docs, by="doc_id"))
-    if cache_signatures:
-        # scoped, not raw persist: six registry queries run this
-        # pipeline, and raw per-invocation persists pile up until the
-        # ContextCleaner notices (the round-7/8 ADVICE class the
-        # cache module exists for) — under the bench's min-of-3 each
-        # site would otherwise hold 3+ stale signature relations.
-        # Only the SHINGLE relation is cached: the signature aggregate
-        # reads it and is cheap codegen on top (~1 s at the 500 k-doc
-        # point), and a second nested cache level measured SLOWER
-        # (kcore A/B: persist-both 22.8 s vs persist-sh-only 18.8 s —
-        # the sigs cache's fill/scan overhead exceeds the one extra
-        # sig aggregate the band join's two sides pay)
-        from ..cache import persist_scoped
-
-        sh = persist_scoped("minhash_shingles", sh)
-        # materialize the cache EAGERLY: four consumer subtrees (the
-        # band join's two sides + the verify's two sides) otherwise
-        # race to fill it concurrently, each recomputing the corpus
-        # pass for the partitions it reaches first (the r14
-        # basket_lift "+5 s racing broadcast fills" failure mode,
-        # observed here as a 14→67 s run-to-run spread at sf10)
-        sh.count()
+    sh = persist_scoped(
+        "minhash_shingles", shingle_hash_rel(spread(docs, by="doc_id"))
+    )
     sigs = minhash_signatures(sh)
     return jaccard_verify(lsh_candidate_pairs(sigs), sh, threshold)
 
@@ -357,7 +335,6 @@ def minhash_cross_near_duplicates(
     corpus: DataFrame,
     benchmark: DataFrame,
     threshold: float = 0.8,
-    cache_signatures: bool = True,
 ) -> DataFrame:
     """Bipartite MinHash-LSH near-dups between a training corpus and
     a benchmark set — FUZZY decontamination: where the n-gram screen
@@ -382,13 +359,10 @@ def minhash_cross_near_duplicates(
     doc_a against the corpus signatures and doc_b against the
     benchmark's — `jaccard_verify(signed_b=...)`).
     """
-    from ..cache import persist_scoped
-
-    sha = shingle_hash_rel(spread(corpus, by="doc_id"))
-    shb = shingle_hash_rel(benchmark)
-    if cache_signatures:
-        sha = persist_scoped("minhash_cross_sh_a", sha)
-        shb = persist_scoped("minhash_cross_sh_b", shb)
+    sha = persist_scoped(
+        "minhash_cross_sh_a", shingle_hash_rel(spread(corpus, by="doc_id"))
+    )
+    shb = persist_scoped("minhash_cross_sh_b", shingle_hash_rel(benchmark))
     siga = minhash_signatures(sha)
     sigb = minhash_signatures(shb)
     ka = band_keys(siga).alias("a")
@@ -421,10 +395,12 @@ def duplicate_clusters(
     neighbors' labels; converges in O(graph diameter) rounds, which for
     near-dup graphs is tiny (duplicate clusters are dense).  Each round
     is one shuffle (join + min-agg) — the same shape GraphX/GraphFrames
-    use — and the per-round convergence check is a driver-side count of
-    changed labels, materializing the round's result so the loop never
-    recomputes history.  At extreme diameters, periodic checkpointing
-    would bound plan growth; `max_iterations` bounds it here.
+    use — cached under one scoped key, so a round reads the previous
+    round's cache and the loop never recomputes history.  A round
+    flags the labels it lowered; the convergence check is a driver-side
+    probe for any flag on the cached round.  At extreme diameters,
+    periodic checkpointing would bound plan growth; `max_iterations`
+    bounds it here.
 
     Deterministic (min over an unordered set), so the DuckDB oracle
     reproduces it with a recursive min-reachability CTE.
@@ -432,15 +408,6 @@ def duplicate_clusters(
     Output: (doc_id, cluster_id = min doc_id in component,
     cluster_size), non-singleton members only, ordered by doc_id.
     """
-    from ..cache import evict_scoped, persist_scoped, register_scoped
-
-    # evict the previous invocation's FINAL label relation before this
-    # invocation persists anything: the final round's plan is
-    # canonically identical across invocations, and CacheManager
-    # removes cache entries by canonicalized plan — an end-of-call
-    # evict would therefore kill THIS invocation's freshly-built cache
-    # (the r15 graph_kcore lesson, same pattern)
-    evict_scoped("dedup_cluster_labels_final")
     pairs = minhash_near_duplicates(docs, threshold).select("doc_a", "doc_b")
     edges = persist_scoped(
         "dedup_cluster_edges",
@@ -450,11 +417,10 @@ def duplicate_clusters(
             )
         ),
     )
-    labels = persist_scoped(
-        "dedup_cluster_labels0",
+    labels = (
         edges.select(F.col("doc_a").alias("doc_id"))
         .distinct()
-        .withColumn("label", F.col("doc_id")),
+        .withColumn("label", F.col("doc_id"))
     )
     for _ in range(max_iterations):
         neighbor_min = (
@@ -462,35 +428,21 @@ def duplicate_clusters(
             .groupBy(F.col("doc_a").alias("doc_id"))
             .agg(F.min("label").alias("neighbor_label"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
+        labels = persist_scoped(
+            "dedup_cluster_labels",
+            labels.join(neighbor_min, "doc_id", "left").select(
                 "doc_id",
                 F.least(
                     F.col("label"),
                     F.coalesce("neighbor_label", "label"),
                 ).alias("label"),
-            )
-            .persist()
+                F.coalesce(
+                    F.col("neighbor_label") < F.col("label"), F.lit(False)
+                ).alias("lowered"),
+            ),
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
+        if labels.where("lowered").limit(1).count() == 0:
             break
-    # track the surviving (returned) label relation under a scoped
-    # key: the loop unpersists every superseded round, but the FINAL
-    # round's blocks used to outlive the call until the
-    # ContextCleaner noticed — the same leak class as the raw
-    # signature persists.  Register only (already persisted by the
-    # loop); the matching evict ran before the loop.
-    labels = register_scoped("dedup_cluster_labels_final", labels)
     sizes = labels.groupBy("label").agg(
         F.count("*").alias("cluster_size")
     )
@@ -590,7 +542,7 @@ def with_simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def simhash_near_duplicates(
-    docs: DataFrame, max_hamming: int = HAMMING_MAX, cache_hashes: bool = True
+    docs: DataFrame, max_hamming: int = HAMMING_MAX
 ) -> DataFrame:
     """SimHash near-dup pairs with hamming distance <= max_hamming.
 
@@ -600,19 +552,13 @@ def simhash_near_duplicates(
     xor + bit_count.  Output: (doc_a, doc_b, hamming).
 
     The (doc_id, simhash) relation feeds both sides of the block
-    self-join; ``cache_hashes`` persists it (16 bytes/doc) so the
-    hash pass runs once.
+    self-join; it is cached (16 bytes/doc) so the hash pass runs
+    once.
     """
-    hashed = with_simhash(spread(docs, by="doc_id")).select(
-        "doc_id", "simhash"
+    hashed = persist_scoped(
+        "simhash_hashes",
+        with_simhash(spread(docs, by="doc_id")).select("doc_id", "simhash"),
     )
-    if cache_hashes:
-        from ..cache import persist_scoped
-
-        hashed = persist_scoped("simhash_hashes", hashed)
-        # eager fill — the block self-join's two sides otherwise race
-        # to fill the cold cache (see minhash_near_duplicates)
-        hashed.count()
     blocks = hashed.select(
         "doc_id",
         "simhash",

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import persist_scoped
+
 #: cosine(a, b) over array<double> columns, sequential left-fold sums —
 #: deterministic and reproducible in any engine.
 def cosine(a: Column, b: Column) -> Column:
@@ -212,7 +214,6 @@ def near_dup_pairs_lsh(
     embeddings: DataFrame,
     threshold: float,
     dims: int = 64,
-    cache_signatures: bool = True,
 ) -> DataFrame:
     """Embedding near-duplicate pairs AT SCALE: sign-LSH bucket
     self-join for candidate discovery, exact cosine verification.
@@ -227,19 +228,18 @@ def near_dup_pairs_lsh(
     result is exactly reproducible.
 
     The (vec_id, t, sig) relation feeds both sides of the self-join;
-    ``cache_signatures`` persists it (~24 bytes × 8 rows per vector)
-    so the signature pass runs once.
+    it is cached (~24 bytes × 8 rows per vector) so the signature pass
+    runs once.
     """
     emb = _as_double(embeddings).select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
-    tall = with_signatures(emb.select("vec_id", "embedding"), dims).select(
-        "vec_id", F.posexplode("sigs").alias("t", "sig")
+    tall = persist_scoped(
+        "emb_lsh_tall_sigs",
+        with_signatures(emb.select("vec_id", "embedding"), dims).select(
+            "vec_id", F.posexplode("sigs").alias("t", "sig")
+        ),
     )
-    if cache_signatures:
-        from ..cache import persist_scoped
-
-        tall = persist_scoped("emb_lsh_tall_sigs", tall)
     pairs = (
         tall.alias("a")
         .join(
@@ -971,20 +971,17 @@ def _ivfpq_model_resid(
     """Model training plus the residual relation it was derived from,
     so `ivfpq_topk` can reuse the assignment/residual fold for its
     codes instead of re-deriving the corpus-wide map work a second
-    time (round-7 review finding).
+    time.
 
     ``cache_resid`` scope-persists the residual relation: its lineage
     (centroid TakeOrdered → broadcast → argmax assign → centroid
     join → subtract) is referenced by BOTH the codebook aggregate
     (a broadcast build) and the code fold — without the cache the
-    whole corpus map chain executes twice per materialization (round
-    14; evict-scoped, so every bench/oracle run still recomputes from
-    parquet)."""
+    whole corpus map chain executes twice per materialization (not
+    memoized, so every run still recomputes from parquet)."""
     assigned, cents = ivf_assign(embeddings, n_lists)
     resid = _ivfpq_residuals(assigned, cents)
     if cache_resid:
-        from ..cache import persist_scoped
-
         resid = persist_scoped("ivfpq_resid", resid)
     cb = _pq_cent_row(resid.select("vec_id", "embedding"), k)
     return cents, cb, resid
@@ -1179,11 +1176,9 @@ def bq_adc_search(
     # feeds BOTH the table branch (via `needed`) and the score branch —
     # without the cache the corpus-wide Hamming scan and the code scan
     # in its lineage re-run once per branch (3x the corpus read at
-    # scale).  Scoped persist (round-8 ADVICE): bq_ann_ingest_writer
+    # scale).  Scoped persist: bq_ann_ingest_writer
     # calls this every micro-batch, so each invocation must free the
     # previous one's blocks instead of waiting on the ContextCleaner.
-    from ..cache import persist_scoped
-
     short = persist_scoped(
         "bq_adc_short",
         bq_search(packed, packed_q, shortlist).select("qid", "vec_id"),
@@ -1264,13 +1259,10 @@ def bq_ivfpq_rerank_topk(
     are the STORED STATE in the production streaming index, but as
     lazy plans every downstream action re-derived them from scratch
     (the codebook's lineage alone is a full corpus assign+residual
-    pass, so one search paid ~4 corpus passes — the r09 sf10 profile:
-    17 s composed vs 0.8 s stage-1 + 0.3 s stage-2 once materialized).
+    pass, so one search paid ~4 corpus passes).
     Persisting here restores the index semantics the operator's
     signature (prebuilt relations into `bq_adc_search`) already
     promises."""
-    from ..cache import persist_scoped
-
     emb = _as_double(embeddings).select("vec_id", "embedding")
     cents, cb, resid = _ivfpq_model_resid(emb, n_lists, k)
     # memoize=True: inputs are immutable fixture parquet, so a

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..cache import persist_scoped
 from ..catalog import load_table
 from ..operators import joins
 from .registry import QuerySpec
@@ -663,8 +664,6 @@ def q_basket_lift(spark, sf_dir):
             ).alias("mask")
         )
     )
-    from ..cache import persist_scoped
-
     b2 = baskets.select(
         F.expr(
             "concat(filter(sequence(0, 63),"

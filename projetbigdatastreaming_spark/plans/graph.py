@@ -19,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import persist_scoped
 from ..catalog import load_table
+from ..operators.dedup import minhash_near_duplicates
 from .registry import QuerySpec
 
 #: damping factor and unrolled iteration count (fixed: the unroll IS
@@ -189,18 +191,8 @@ def q_graph_triangles(spark, sf_dir):
     (e1.u,e2.v)=(e3.u,e3.v)); the three 1-row aggregates cross into
     one summary row (allowed 1×1 BNLJs).
     """
-    from ..cache import persist_scoped
-    from ..operators import dedup as _dedup
-
-    pairs = _dedup.minhash_near_duplicates(
-        load_table(spark, sf_dir, "documents"), _TRI_THRESHOLD
-    ).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     # referenced 5x below (degree + count + three join legs)
-    edges = persist_scoped("graph_tri_edges", pairs)
-    # eager fill: the multiple consumer subtrees below otherwise
-    # race to fill the cold cache, re-running the pair pipeline
-    # concurrently (see minhash_near_duplicates)
-    edges.count()
+    edges = _near_dup_edges(spark, sf_dir)
     n_edges = edges.agg(F.count("*").cast("long").alias("n_edges"))
     deg = (
         edges.selectExpr("explode(array(u, v)) AS x")
@@ -236,6 +228,21 @@ def q_graph_triangles(spark, sf_dir):
 
 #: near-dup threshold shared with the dedup family's queries
 _TRI_THRESHOLD = 0.8
+
+
+def _near_dup_edges(spark, sf_dir) -> DataFrame:
+    """The near-dup pair graph every graph query below reads: (u, v)
+    with u < v, from the exact-verified LSH pipeline, cached under ONE
+    scoped key — one key per plan is what keeps each invocation on its
+    own cache (two keys for one plan share a CacheManager entry, and
+    replacing either key would uncache the other)."""
+    return persist_scoped(
+        "graph_near_dup_edges",
+        minhash_near_duplicates(
+            load_table(spark, sf_dir, "documents"), _TRI_THRESHOLD
+        ).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")),
+    )
+
 
 #: brute-force near-dup pair CTE (the dedup oracles' shingle recipe)
 _SQL_TRI_EDGES = """\
@@ -301,17 +308,7 @@ def q_graph_assortativity(spark, sf_dir):
     --gc-each, round 10): sf1 3.20 s → sf10 8.34 s, 2.6×/decade —
     the cost is the shared LSH signing, like the triangle census.
     """
-    from ..cache import persist_scoped
-    from ..operators import dedup as _dedup
-
-    pairs = _dedup.minhash_near_duplicates(
-        load_table(spark, sf_dir, "documents"), _TRI_THRESHOLD
-    ).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    edges = persist_scoped("graph_assort_edges", pairs)
-    # eager fill: the multiple consumer subtrees below otherwise
-    # race to fill the cold cache, re-running the pair pipeline
-    # concurrently (see minhash_near_duplicates)
-    edges.count()
+    edges = _near_dup_edges(spark, sf_dir)
     deg = (
         edges.selectExpr("explode(array(u, v)) AS x")
         .groupBy("x")
@@ -396,17 +393,7 @@ def q_graph_clustering_coeff(spark, sf_dir):
     10.1 s — the census family's pair-volume growth, sub-quadratic
     across both decades.
     """
-    from ..cache import persist_scoped
-    from ..operators import dedup as _dedup
-
-    pairs = _dedup.minhash_near_duplicates(
-        load_table(spark, sf_dir, "documents"), _TRI_THRESHOLD
-    ).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    edges = persist_scoped("graph_lcc_edges", pairs)
-    # eager fill: the multiple consumer subtrees below otherwise
-    # race to fill the cold cache, re-running the pair pipeline
-    # concurrently (see minhash_near_duplicates)
-    edges.count()
+    edges = _near_dup_edges(spark, sf_dir)
     deg = (
         edges.selectExpr("explode(array(u, v)) AS x")
         .groupBy("x")
@@ -492,69 +479,41 @@ def q_graph_kcore(spark, sf_dir):
 
     Semantics of the fixed unroll: peeling is monotone (the edge set
     only shrinks), so R rounds compute the exact 2-core whenever the
-    peel converges within R; `test_kcore_fixpoint_reached` pins that
-    on the fixture (convergence needs ≤ the graph's degeneracy-peel
-    depth, which for near-dup graphs — bounded cluster width — is
-    small; raising _KCORE_ROUNDS costs one shuffle per extra round).
+    peel converges within R; `test_kcore_converged_and_sound` pins
+    that on the fixture (convergence needs ≤ the graph's
+    degeneracy-peel depth, which for near-dup graphs — bounded cluster
+    width — is small; raising _KCORE_ROUNDS costs one shuffle per
+    extra round).
 
     Scale plan: each round is ONE hash-agg (degrees of the current
     edge relation) + TWO broadcast-able semi-joins filtering the edge
-    list (survivor side is ≤|V| rows of ids).  Round 15 (VERDICT r14
-    item 3): each round's edge relation is an eagerly-materialized
-    persist whose SUPERSEDED predecessor is unpersisted immediately —
-    the old ``localCheckpoint(eager=False)`` chain pinned every
-    round's full edge relation for the session (the same leak class
-    the r14 scoped-persist pass closed elsewhere) and blocked
-    exchange reuse.  The per-round count that materializes the cache
-    doubles as a FIXPOINT TEST: peeling only deletes, so an unchanged
-    edge count means an identical edge set, and every remaining round
-    is the identity — the loop exits early with the exact same output
-    the full unroll produces (the oracle's R fixed rounds are a
-    superset of the converged peel).  Edge volume is pair-bounded by
-    LSH construction, and only shrinks.
+    list (survivor side is ≤|V| rows of ids).  Each round's edge
+    relation is scoped-persisted under one key, so it is filled from
+    the previous round's live cache and then frees it: the loop holds
+    at most two rounds.  Before each round a probe for any node of
+    degree < k is a FIXPOINT TEST: with no such node the peel is the
+    identity, and so is every later round — the loop exits early with
+    the exact same output the full unroll produces (the oracle's R
+    fixed rounds are a superset of the converged peel).  Edge volume
+    is pair-bounded by LSH construction, and only shrinks.
     """
-    from ..cache import evict_scoped, persist_scoped, register_scoped
-    from ..operators import dedup as _dedup
-
-    # evict the PREVIOUS invocation's final core before this
-    # invocation persists anything: CacheManager entries are keyed by
-    # canonicalized plan, and the final round's plan is canonically
-    # identical across invocations — evicting it at the END (the
-    # register point) would remove THIS invocation's just-filled
-    # cache entry too, forcing the returned plan to recompute the
-    # whole pipeline through the loop's dead caches
-    evict_scoped("graph_kcore_core")
-    pairs = _dedup.minhash_near_duplicates(
-        load_table(spark, sf_dir, "documents"), _TRI_THRESHOLD
-    ).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    edges = persist_scoped("graph_kcore_edges", pairs)
-    prev_n = edges.count()
+    edges = _near_dup_edges(spark, sf_dir)
     for _ in range(_KCORE_ROUNDS):
         deg = (
             edges.selectExpr("explode(array(u, v)) AS x")
             .groupBy("x")
             .agg(F.count("*").cast("long").alias("d"))
         )
+        if deg.where(F.col("d") < _KCORE_K).limit(1).count() == 0:
+            break  # fixpoint: no node to peel, so this round and every
+            # later one is the identity (monotone-shrinking edge set)
         keep = deg.where(F.col("d") >= _KCORE_K).select("x")
-        nxt = (
-            edges.join(
-                keep.withColumnRenamed("x", "u"), "u", "left_semi"
-            )
+        edges = persist_scoped(
+            "graph_kcore_core",
+            edges.join(keep.withColumnRenamed("x", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("x", "v"), "v", "left_semi")
-            .select("u", "v")
-            .persist()
+            .select("u", "v"),
         )
-        n = nxt.count()  # materialize this round, then free the last
-        edges.unpersist()
-        edges = nxt
-        if n == prev_n:
-            break  # fixpoint: filter was the identity, so is every
-            # later round (monotone-shrinking edge set)
-        prev_n = n
-    # track the surviving relation so the NEXT invocation's up-front
-    # evict frees it (register only — it is already persisted and
-    # materialized, and its predecessor was evicted before the loop)
-    edges = register_scoped("graph_kcore_core", edges)
     core_deg = (
         edges.selectExpr("explode(array(u, v)) AS x")
         .groupBy("x")
@@ -614,17 +573,7 @@ def q_graph_edge_jaccard(spark, sf_dir):
     three edge slots, degree agg broadcast back onto edges.  No new
     join shapes, no all-pairs anything.
     """
-    from ..cache import persist_scoped
-    from ..operators import dedup as _dedup
-
-    pairs = _dedup.minhash_near_duplicates(
-        load_table(spark, sf_dir, "documents"), _TRI_THRESHOLD
-    ).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    edges = persist_scoped("graph_ej_edges", pairs)
-    # eager fill: the multiple consumer subtrees below otherwise
-    # race to fill the cold cache, re-running the pair pipeline
-    # concurrently (see minhash_near_duplicates)
-    edges.count()
+    edges = _near_dup_edges(spark, sf_dir)
     deg = (
         edges.selectExpr("explode(array(u, v)) AS x")
         .groupBy("x")

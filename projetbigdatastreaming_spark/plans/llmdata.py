@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..cache import persist_scoped
 from ..catalog import load_table
 from ..functions.text import (
     STOPWORDS,
@@ -28,11 +29,6 @@ from ..functions.text import (
 )
 from ..operators import dedup, sampling, similarity
 from .registry import QuerySpec
-
-#: canonical implementation lives in cache.py so the operators layer
-#: can use it too (round-8 ADVICE: bq_adc_search); this alias keeps
-#: the historical call sites unchanged
-from ..cache import persist_scoped as _persist_scoped  # noqa: E402
 
 #: fixed query vectors for the top-k searches (first five vec_ids)
 QUERY_VEC_IDS = [0, 1, 2, 3, 4]
@@ -1113,6 +1109,19 @@ ORDER BY qid, rk
 """
 
 
+def _exact_l2_topk(emb: DataFrame) -> DataFrame:
+    """The exact squared-L2 top-k (qid, vec_id) the PQ-family recall
+    gauges score against, cached under one scoped key: it feeds both
+    the hit join and the qid spine, and without the cache the
+    brute-force scoring scan runs twice (~50·|Q| rows of state).  One
+    key for the one plan, so the gauges never uncache each other's
+    entry."""
+    return persist_scoped(
+        "l2_topk_exact",
+        similarity.l2_topk(emb, QUERY_VEC_IDS, TOPK).select("qid", "vec_id"),
+    )
+
+
 def _recall_gauge(exact: DataFrame, ann: DataFrame) -> DataFrame:
     """Shared recall@k gauge: one row per query id with
     ``recall_at_k`` = |ann ∩ exact| / TOPK, 4dp.  ``exact`` and
@@ -1120,7 +1129,7 @@ def _recall_gauge(exact: DataFrame, ann: DataFrame) -> DataFrame:
     every join here is broadcast-sized regardless of corpus size.
     ``exact`` feeds BOTH the hit join and the qid spine — callers
     whose exact side has an expensive lineage persist it first (see
-    ``q_emb_pq_recall``).  Six gauges share this body: LSH, BQ,
+    ``_exact_l2_topk``).  Six gauges share this body: LSH, BQ,
     matryoshka, JL, PQ-ADC, IVFADC."""
     hits = exact.join(ann, ["qid", "vec_id"]).groupBy("qid").agg(
         F.count("*").alias("__n_hits")
@@ -2469,7 +2478,7 @@ def q_bigram_logprob(spark, sf_dir):
         .select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
         .where((F.col("w1") != "") & (F.col("w2") != ""))
     )
-    big_tf = _persist_scoped("bigram_big_tf", pairs.groupBy(
+    big_tf = persist_scoped("bigram_big_tf", pairs.groupBy(
         "doc_id", "w1", "w2"
     ).agg(F.count("*").alias("tf")))
     cb = big_tf.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
@@ -3035,7 +3044,7 @@ def q_dedup_containment(spark, sf_dir):
         .select("h"),
         "h",
     )
-    rare = _persist_scoped("containment_rare", rare)
+    rare = persist_scoped("containment_rare", rare)
     sizes = rare.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a, b = rare.alias("a"), rare.alias("b")
     pairs = (
@@ -3216,6 +3225,26 @@ ORDER BY 1
 
 # -- unigram-LM surprisal scoring --------------------------------------------
 
+def _doc_token_tf(docs: DataFrame) -> DataFrame:
+    """(doc_id, token, tf) over lower-cased, whitespace-split text,
+    cached under one scoped key (unigram_logprob and tfidf_topk both
+    read this plan, and one plan must live under one key).  Every
+    consumer reads it at least twice, and without the cache Spark
+    re-runs the corpus explode per consumer."""
+    toks = docs.select(
+        "doc_id",
+        F.explode(
+            F.split(
+                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
+            )
+        ).alias("token"),
+    ).where(F.col("token") != "")
+    return persist_scoped(
+        "doc_token_tf",
+        toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf")),
+    )
+
+
 def q_unigram_logprob(spark, sf_dir):
     """Model-based quality scoring: per-document mean surprisal under
     the corpus's own unigram language model (the cheap ancestor of the
@@ -3234,20 +3263,7 @@ def q_unigram_logprob(spark, sf_dir):
     (count/total), so both engines feed identical doubles to ln();
     the per-doc mean is rounded to 6 dp.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
-            )
-        ).alias("token"),
-    ).where(F.col("token") != "")
-    tok_tf = toks.groupBy("doc_id", "token").agg(
-        F.count("*").alias("tf")
-    )
-    # feeds vocab AND the scoring join
-    tok_tf = _persist_scoped("unigram_tok_tf", tok_tf)
+    tok_tf = _doc_token_tf(load_table(spark, sf_dir, "documents"))
     vocab = tok_tf.groupBy("token").agg(F.sum("tf").alias("ctf"))
     total = vocab.agg(F.sum("ctf").alias("corpus_n"))
     return (
@@ -3477,28 +3493,17 @@ def q_tfidf_topk(spark, sf_dir):
     Scale plan: the tf relation (one row per distinct (doc, token) —
     the collapsed, much-smaller cousin of the raw token stream) is
     PERSISTED because both df and the scoring join consume it; without
-    the persist Spark re-runs the corpus explode per consumer (the
-    executed plan showed 3 scans / 0 reuse).  df re-aggregates tf's
-    output; the df relation equi-joins back on token (AQE picks
-    broadcast vs shuffle); the per-doc top-3 is WindowGroupLimit —
-    map-side limit before the doc_id exchange, never a global sort.
-    The corpus size N enters as a broadcast single-row aggregate, NOT
-    a driver-side count() in the build path (the ivf_assign lesson
-    from round 1).
+    the persist Spark re-runs the corpus explode per consumer.  df
+    re-aggregates tf's output; the df relation equi-joins back on
+    token (AQE picks broadcast vs shuffle); the per-doc top-3 is
+    WindowGroupLimit — map-side limit before the doc_id exchange,
+    never a global sort.  The corpus size N enters as a broadcast
+    single-row aggregate, NOT a driver-side count() in the build
+    path.
     """
     docs = load_table(spark, sf_dir, "documents")
     total = docs.agg(F.count("*").cast("double").alias("n_docs"))
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
-            )
-        ).alias("token"),
-    ).where(F.col("token") != "")
-    tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    # consumed by df_ AND the scoring join below
-    tf = _persist_scoped("tfidf_tf", tf)
+    tf = _doc_token_tf(docs)
     df_ = tf.groupBy("token").agg(F.count("*").alias("df"))
     scored = (
         tf.join(df_, "token")
@@ -5145,15 +5150,7 @@ def q_emb_pq_recall(spark, sf_dir):
     rank identical values with vec_id tie-breaks; one row per query
     id."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # persisted: the exact top-k feeds BOTH the hit join and the qid
-    # spine — without the cache the brute-force scoring scan runs
-    # twice (the big_tf persist precedent; ~50·|Q| rows of state)
-    exact = _persist_scoped(
-        "pq_recall_exact",
-        similarity.l2_topk(emb, QUERY_VEC_IDS, TOPK).select(
-            "qid", "vec_id"
-        ),
-    )
+    exact = _exact_l2_topk(emb)
     ann = similarity.pq_adc_topk(
         emb, QUERY_VEC_IDS, TOPK, m=PQ_M, k=PQ_K
     ).select("qid", "vec_id")
@@ -5430,12 +5427,7 @@ def q_emb_ivfpq_recall(spark, sf_dir):
     found — both engines replay the identical probe, so the measured
     value is exact, not a tolerance check."""
     emb = load_table(spark, sf_dir, "embeddings")
-    exact = _persist_scoped(
-        "ivfpq_recall_exact",
-        similarity.l2_topk(emb, QUERY_VEC_IDS, TOPK).select(
-            "qid", "vec_id"
-        ),
-    )
+    exact = _exact_l2_topk(emb)
     ann = similarity.ivfpq_topk(
         emb,
         QUERY_VEC_IDS,
@@ -5539,12 +5531,7 @@ def q_emb_bq_ivfpq_recall(spark, sf_dir):
     exact trade `bq_adc_search` makes; both engines replay the
     identical shortlist, so the measured value is exact."""
     emb = load_table(spark, sf_dir, "embeddings")
-    exact = _persist_scoped(
-        "bq_ivfpq_recall_exact",
-        similarity.l2_topk(emb, QUERY_VEC_IDS, TOPK).select(
-            "qid", "vec_id"
-        ),
-    )
+    exact = _exact_l2_topk(emb)
     ann = similarity.bq_ivfpq_rerank_topk(
         emb,
         QUERY_VEC_IDS,
@@ -6566,7 +6553,7 @@ def q_bigram_pmi(spark, sf_dir):
         .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
         .where((F.col("w1") != "") & (F.col("w2") != ""))
     )
-    cb = _persist_scoped(
+    cb = persist_scoped(
         "pmi_bigram_counts",
         pairs.groupBy("w1", "w2").agg(
             F.count("*").cast("bigint").alias("c12")
@@ -6761,8 +6748,6 @@ def q_text_keyphrases_rake(spark, sf_dir):
         )
         .where(F.col("plen") <= _RAKE_MAX_LEN)
     )
-    from ..cache import persist_scoped
-
     cands = persist_scoped("rake_cands", cands)
     member = cands.select(
         "phrase",
@@ -6901,51 +6886,60 @@ def q_retrieval_eval_graded(spark, sf_dir):
         f"CAST(GREATEST(1, 4 - CAST(FLOOR((best_cos - cos_sim)"
         f" / {_GRADE_BUCKET}) AS INT)) AS INT) AS grade"
     )
-    exact = similarity.cosine_topk(emb, QUERY_VEC_IDS, TOPK)
-    best = exact.groupBy("qid").agg(F.max("cos_sim").alias("best_cos"))
-    graded = _persist_scoped(
-        "retrieval_eval_graded_rels",
-        exact.join(F.broadcast(best), "qid").selectExpr(
-            "qid", "vec_id", "rk AS rk_exact", grade_expr
-        ),
-    )
+
+    def graded_arm():
+        exact = similarity.cosine_topk(emb, QUERY_VEC_IDS, TOPK)
+        best = exact.groupBy("qid").agg(F.max("cos_sim").alias("best_cos"))
+        return persist_scoped(
+            "retrieval_eval_graded_rels",
+            exact.join(F.broadcast(best), "qid").selectExpr(
+                "qid", "vec_id", "rk AS rk_exact", grade_expr
+            ),
+        )
+
+    def bq_arm():
+        return persist_scoped(
+            "retrieval_eval_graded_bq",
+            similarity.bq_topk(emb, QUERY_VEC_IDS, TOPK).select(
+                "qid", "vec_id", "rk"
+            ),
+        )
+
+    def ivf_arm():
+        return persist_scoped(
+            "retrieval_eval_graded_ivf",
+            similarity.ivfpq_topk(
+                emb,
+                QUERY_VEC_IDS,
+                TOPK,
+                n_lists=IVF_N_LISTS,
+                nprobe=IVF_NPROBE,
+                m=PQ_M,
+                k=PQ_K,
+            ).select("qid", "vec_id", "rk"),
+        )
+
+    # the three arm relations are independent and each is consumed
+    # 2-3x below: build (and so fill) them concurrently — the
+    # scheduler backfills the lighter arms' tails with the IVFADC
+    # arm's tasks, so the wall cost is ~max(arm) instead of Σ(arm)
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        graded, bq_p, ivf_p = pool.map(
+            lambda arm: arm(), (graded_arm, bq_arm, ivf_arm)
+        )
     idcg = graded.groupBy("qid").agg(
         F.expr(
             "SUM((POW(2.0, grade) - 1.0) / LOG2(rk_exact + 1))"
         ).alias("idcg")
     )
-    bq = similarity.bq_topk(emb, QUERY_VEC_IDS, TOPK).select(
-        "qid", "vec_id", "rk"
-    )
-    ivf = similarity.ivfpq_topk(
-        emb,
-        QUERY_VEC_IDS,
-        TOPK,
-        n_lists=IVF_N_LISTS,
-        nprobe=IVF_NPROBE,
-        m=PQ_M,
-        k=PQ_K,
-    ).select("qid", "vec_id", "rk")
-    bq_p = _persist_scoped("retrieval_eval_graded_bq", bq)
-    ivf_p = _persist_scoped("retrieval_eval_graded_ivf", ivf)
-    # round 15 (guide §2.6 "overlap independent jobs"): the three
-    # arm relations are independent and each is consumed 2-3x below —
-    # left lazy, their first action both serializes the three corpus
-    # scans AND races each cache's consumers into duplicate fills
-    # (the minhash lesson).  Materialize them concurrently: the
-    # scheduler backfills the lighter arms' tails with the IVFADC
-    # arm's tasks, so the wall cost is ~max(arm) instead of Σ(arm).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(lambda d: d.count(), (graded, bq_p, ivf_p)))
-    # round 14: RRF fusion as UNION + per-(qid, vec_id) sum instead of
-    # a full-outer join — a missing arm contributes exactly the 0.0
-    # the old CASE produced, and the term sum is order-insensitive
-    # over at most two doubles per key, so the fused score (and its
-    # det6 rounding) is bit-identical.  Removes the full-outer
-    # SortMergeJoin (the one join shape that can never broadcast) from
-    # the plan.
+    # RRF fusion as UNION + per-(qid, vec_id) sum: a missing arm
+    # contributes 0.0 and the term sum is order-insensitive over at
+    # most two doubles per key, so the fused score (and its det6
+    # rounding) equals a full-outer-join formulation without the
+    # full-outer SortMergeJoin (the one join shape that can never
+    # broadcast).
     fused = (
         bq_p.selectExpr(
             "qid", "vec_id", f"1.0 / ({_RRF_K} + rk) AS term"
@@ -7568,7 +7562,7 @@ def q_ngram_entropy_rate(spark, sf_dir):
         )
         .where((F.col("w1") != "") & (F.col("w2") != ""))
     )
-    cb = _persist_scoped(
+    cb = persist_scoped(
         "entropy_cb",
         pairs.groupBy("source", "w1", "w2").agg(
             F.count(F.lit(1)).cast("bigint").alias("c12")

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..cache import persist_scoped
 from ..catalog import load_table
 from ..operators.sampling import _portable_hash
 from ..operators.sketches import (
@@ -400,8 +401,6 @@ def q_dedup_incremental_bloom(spark, sf_dir):
     from ..functions.text import fingerprint
     from ..operators.sketches import bloom_cells, bloom_probe
 
-    from .llmdata import _persist_scoped
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", fingerprint("text").alias("fp")
     )
@@ -411,10 +410,9 @@ def q_dedup_incremental_bloom(spark, sf_dir):
     # persisted: probed feeds THREE consumers (the miss branch, the
     # hit branch, and — through hit_fps — the semi-join's broadcast
     # side); without the cache the whole probe subtree INCLUDING the
-    # corpus bitmap build re-runs per consumer (the r07 bench showed
-    # 3x the unscreened parent's wall from exactly that).  State is
-    # batch-sized; scoped like the llmdata persists.
-    probed = _persist_scoped(
+    # corpus bitmap build re-runs per consumer.  State is
+    # batch-sized.
+    probed = persist_scoped(
         "dedup_bloom_probed", bloom_probe(batch, bloom_cells(corpus))
     )
     definitely_new = probed.where(F.col("bloom_hit") == 0)

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..cache import persist_scoped
 from .registry import QuerySpec
 
 # ---------------------------------------------------------------------------
@@ -75,8 +76,6 @@ def q_recursive_cte(spark, sf_dir):
         spark, sf_dir,
         only=("lineitem", "orders", "customer", "supplier", "nation"),
     )
-    from ..cache import persist_scoped
-
     edges = persist_scoped("recursive_cte_edges", spark.sql(_EDGES_SQL))
     edges.createOrReplaceTempView("trade_edges")
     return spark.sql(_RECURSIVE_BODY.format(edges="trade_edges"))

@@ -172,12 +172,26 @@ def test_kcore_converged_and_sound(spark, sf_dir):
     unrolled peel hadn't reached the fixpoint within _KCORE_ROUNDS,
     some surviving node would still show core_degree < 2.  Also: the
     core's nodes are a subset of the d>=2 nodes of the full graph."""
+    from projetbigdatastreaming_spark.cache import _SCOPED_PERSISTS
+
+    def assert_no_dead_handles():
+        # one key per plan, so no eviction can uncache a relation
+        # still registered under another key
+        dead = [
+            k
+            for k, df in _SCOPED_PERSISTS.items()
+            if not df.storageLevel.useMemory
+        ]
+        assert not dead, dead
+
     rows = _q(spark, sf_dir, "graph_kcore").collect()
+    assert_no_dead_handles()
     assert rows, "fixture 2-core should be non-empty"
     assert min(r.core_degree for r in rows) >= 2
     lcc_nodes = {
         r.doc_id for r in _q(spark, sf_dir, "graph_clustering_coeff").collect()
     }
+    assert_no_dead_handles()
     assert {r.doc_id for r in rows} <= lcc_nodes
 
 
