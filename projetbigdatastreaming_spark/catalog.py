@@ -1,135 +1,130 @@
 """Table loading for the driver's synthetic parquet fixtures.
 
 Tables (TESTDATA.md): region nation customer supplier part orders
-lineitem events documents embeddings — one parquet file per table under
-``/root/testdata/sf{0.001,0.01,0.1}/``.
+lineitem events documents embeddings — one parquet file per table in
+each fixture dir (``sf0.001``, ``sf0.01``, ``sf0.1``), or a directory of
+part files (a Spark-written copy such as ``tools/gen_scale.py``'s
+``.bench_sf1``).
+
+Contract of :func:`load_table`:
+
+- **Declared schemas.** A table is read with
+  ``spark.read.schema(S).parquet(path)``, ``S`` from
+  ``schemas.FIXTURE_SCHEMAS`` (all nullable, as a parquet scan infers):
+  no schema-inference job, no cache, one path for every directory.
+- **Footer check.** First the driver reads the parquet footer with
+  pyarrow (a directory table's first data file) and compares each
+  column's parquet physical/logical type with its declared field.  The
+  arrow view cannot decide: it reports INT96 as ``timestamp[ns]`` too.
+- **One exception.** ``events.ts`` stored as ``TIMESTAMP(NANOS)`` (an
+  older fixture vintage) reads as nanos-longs under
+  ``spark.sql.legacy.parquet.nanosAsLong`` and is truncated to µs
+  ``timestamp_ntz``.
+- **Fail loud.** Any other difference raises ``ValueError`` naming path,
+  column, stored and expected type: a missing or undeclared column,
+  another type, an unannotated INT64 ``ts`` (unit unknown), a
+  UTC-adjusted or INT96 timestamp.  A missing column would otherwise
+  read as silent nulls.
 """
 
 from __future__ import annotations
 
-import functools
+import glob
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from .schemas import FIXTURE_SCHEMAS
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+TABLES = tuple(FIXTURE_SCHEMAS)
 
-# Dimension tables small enough to broadcast at ANY scale factor (TPC-H
-# region/nation are fixed-size; supplier/part/customer grow with sf but
-# stay orders of magnitude under the fact tables).  Used by query code
-# to pick broadcast joins explicitly.
-SMALL_DIMS = frozenset({"region", "nation", "supplier"})
+#: declared type -> the parquet leaf type it reads from
+_STORED = {
+    "int": "INT32",
+    "bigint": "INT64",
+    "float": "FLOAT",
+    "double": "DOUBLE",
+    "string": "BYTE_ARRAY String",
+    "timestamp_ntz": "INT64 Timestamp(microseconds)",
+}
+_TS_NANOS = "INT64 Timestamp(nanoseconds)"
 
 
-@functools.lru_cache(maxsize=64)
-def _ts_is_parquet_nanos(path: str) -> bool:
-    """True iff the file's ``ts`` column is annotated TIMESTAMP(NANOS)
-    in the parquet footer.
+def _expected(dtype) -> str:
+    if isinstance(dtype, ArrayType):
+        return f"LIST<{_expected(dtype.elementType)}>"
+    return _STORED[dtype.simpleString()]
 
-    A LongType in the Spark schema alone is NOT proof of a nanos file:
-    a fixture shipping ``ts`` as a plain unannotated INT64 (e.g.
-    already-microsecond longs) would surface identically under the
-    nanosAsLong legacy conf, and dividing those by 1000 would corrupt
-    every timestamp by 1000x with no error.  The footer is the ground
-    truth, so read it (pyarrow reads only footer metadata here).
-    """
+
+def _stored(column) -> str:
+    """A pyarrow ``ColumnSchema`` (one parquet leaf) as ``_STORED``
+    spells it."""
+    logical = json.loads(column.logical_type.to_json())
+    kind = column.physical_type
+    if logical["Type"] == "Timestamp":
+        utc = ", UTC" if logical["isAdjustedToUTC"] else ""
+        kind += f" Timestamp({logical['timeUnit']}{utc})"
+    elif logical["Type"] != "None":
+        kind += f" {logical['Type']}"
+    return f"LIST<{kind}>" if column.max_repetition_level else kind
+
+
+def _check_footer(path: str, name: str) -> bool:
+    """Raise unless the stored types match the declared schema; True
+    iff ``events.ts`` is the ``TIMESTAMP(NANOS)`` vintage."""
     import pyarrow.parquet as pq
 
-    field = pq.read_schema(path).field("ts")
-    import pyarrow as pa
-
-    return pa.types.is_timestamp(field.type) and field.type.unit == "ns"
-
-
-#: fixture DataFrames cached per (application, sf_dir, table): each
-#: load_table call otherwise costs ~90 ms of footer/schema reads, paid
-#: once per table per QUERY BUILD — across a 22-query bench run that
-#: is seconds of pure metadata overhead.  Only immutable driver
-#: fixture dirs are cached (tests writing their own sf_dirs must see
-#: fresh files).
-_DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-#: immutable fixture roots: the driver's testdata plus the bench's
-#: scaled copy (write-once behind gen_scale's done-marker).  Tests
-#: writing their own sf_dirs (tmp paths) stay uncached.
-_CACHEABLE_PREFIXES = (
-    "/root/testdata/",
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".bench_sf1",
-    ),
-)
+    files = sorted(glob.glob(os.path.join(glob.escape(path), "[!_]*.parquet")))
+    if os.path.isdir(path) and not files:
+        raise ValueError(f"{path}: directory holds no parquet data file")
+    with pq.ParquetFile(files[0] if files else path) as footer:
+        leaves = map(footer.schema.column, range(len(footer.schema)))
+        found = {c.path.split(".")[0]: _stored(c) for c in leaves}
+    want = {f.name: _expected(f.dataType) for f in FIXTURE_SCHEMAS[name]}
+    nanos = name == "events" and found.get("ts") == _TS_NANOS
+    if nanos:
+        want["ts"] = _TS_NANOS
+    for column in [*want, *found]:
+        if found.get(column) != want.get(column):
+            raise ValueError(
+                f"{path}: column {column!r} is stored as"
+                f" {found.get(column, 'nothing (missing)')}, expected"
+                f" {want.get(column, 'no such column')}"
+            )
+    return nanos
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` under its declared schema (module docstring)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    cacheable = sf_dir.startswith(_CACHEABLE_PREFIXES)
-    if cacheable:
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-        hit = _DF_CACHE.get(key)
-        if hit is not None:
-            return hit
-    df = _load_table_uncached(spark, sf_dir, name)
-    if cacheable:
-        _DF_CACHE[key] = df
-    return df
-
-
-def _load_table_uncached(
-    spark: SparkSession, sf_dir: str, name: str
-) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    # events.ts has shipped as either parquet TIMESTAMP(NANOS) — which
-    # Spark's vectorized reader rejects outright, so we read it as raw
-    # nanos-long — or as plain TIMESTAMP(MICROS), which reads natively
-    # as timestamp_ntz.  The nanosAsLong conf is scoped to the events
-    # read (it is still a session-global dynamic conf once set, but it
-    # only changes how TIMESTAMP(NANOS) columns surface, and only the
-    # events fixture has ever shipped one).
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
-        # Footer check before dividing: LongType alone could also mean
-        # a plain-INT64 ts (already µs), which must not be divided.
-        if not _ts_is_parquet_nanos(path):
-            raise ValueError(
-                f"{path}: ts surfaced as LongType but the parquet footer "
-                "says it is not TIMESTAMP(NANOS); refusing to guess its "
-                "unit (plain INT64 µs divided by 1000 would corrupt "
-                "every timestamp silently)"
-            )
-        from pyspark.sql import functions as F
-
-        # Integer `div` — a double division would lose precision at
-        # 1e18 ns; truncation to µs matches what DuckDB (and any
-        # µs-precision engine) does with the same file.  timestampadd
-        # on an NTZ base stays NTZ end-to-end — unlike
-        # timestamp_micros(...).cast("timestamp_ntz"), which routes
-        # through an LTZ instant and shifts by the session timezone.
-        df = df.withColumn(
+    schema = FIXTURE_SCHEMAS[name]
+    if not _check_footer(path, name):
+        return spark.read.schema(schema).parquet(path)
+    # the vectorized reader rejects TIMESTAMP(NANOS) unless this conf
+    # surfaces it as raw nanos-longs (it changes nothing else)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ts_long = StructField("ts", LongType())
+    as_long = StructType([ts_long if f.name == "ts" else f for f in schema])
+    # Integer `div`: a double division would lose precision at 1e18 ns,
+    # and truncation to µs matches DuckDB on the same file.
+    # timestampadd on an NTZ base stays NTZ, unlike timestamp_micros(
+    # ...).cast("timestamp_ntz"), which shifts by the session timezone.
+    return (
+        spark.read.schema(as_long)
+        .parquet(path)
+        .withColumn(
             "ts",
             F.expr(
                 "timestampadd(MICROSECOND, ts div 1000,"
                 " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
             ),
         )
-    return df
+    )
 
 
 def spread(
@@ -168,8 +163,9 @@ def register_views(
     """Register fixture tables as temp views; returns the DataFrames.
 
     ``only`` restricts registration to the tables a query actually
-    reads — each registration costs a parquet footer read, so a
-    one-table SQL query should not pay for ten.
+    reads: each registration is a driver-side footer check plus a
+    DataFrame and view build (no Spark job), which a one-table SQL
+    query need not pay ten times.
     """
     dfs = {}
     for name in only or TABLES:

@@ -122,15 +122,18 @@ def shingle_hash_rel(docs: DataFrame, text_col: str = "text") -> DataFrame:
     toks = docs.select(
         "doc_id", F.split(F.col(text_col), " ").alias("toks")
     )
+    # both branches name their struct fields (w1, w2, w3):
+    # arrays_zip's own names for unnamed inputs are version-dependent
     zipped = F.expr(
         """
         CASE WHEN size(toks) >= 3
-             THEN arrays_zip(slice(toks, 1, size(toks) - 2),
-                             slice(toks, 2, size(toks) - 2),
-                             slice(toks, 3, size(toks) - 2))
-             ELSE array(named_struct('0', concat_ws(' ', toks),
-                                     '1', CAST(NULL AS STRING),
-                                     '2', CAST(NULL AS STRING)))
+             THEN CAST(arrays_zip(slice(toks, 1, size(toks) - 2),
+                                  slice(toks, 2, size(toks) - 2),
+                                  slice(toks, 3, size(toks) - 2))
+                       AS array<struct<w1: string, w2: string, w3: string>>)
+             ELSE array(named_struct('w1', concat_ws(' ', toks),
+                                     'w2', CAST(NULL AS STRING),
+                                     'w3', CAST(NULL AS STRING)))
         END
         """
     )
@@ -141,7 +144,7 @@ def shingle_hash_rel(docs: DataFrame, text_col: str = "text") -> DataFrame:
             # concat_ws skips NULLs, so the short-doc row hashes
             # exactly concat_ws(' ', toks) — the word_shingles
             # fallback value
-            F.expr("concat_ws(' ', s.`0`, s.`1`, s.`2`)")
+            F.expr("concat_ws(' ', s.w1, s.w2, s.w3)")
         ).alias("h"),
     )
     return hashed.groupBy("doc_id").agg(

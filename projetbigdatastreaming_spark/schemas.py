@@ -8,17 +8,24 @@ Reference citations:
 - INVOICE_SCHEMA   <- spooldir-kafka-connect-source.properties:17-18
 - KAFKA_ENVELOPE   <- record fields consumed at KafkaStreaming.scala:123-127
 - EVENT_PROPS_SCHEMA <- driver fixture `events.props` JSON payload
+- FIXTURE_SCHEMAS  <- the ten parquet fixture tables (TESTDATA.md),
+  read by ``catalog.load_table``; every field nullable, as a parquet
+  scan reports it
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
+    ArrayType,
     DateType,
+    DoubleType,
+    FloatType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -94,3 +101,59 @@ KAFKA_ENVELOPE = StructType(
 )
 
 EVENT_PROPS_SCHEMA = StructType([StructField("k", IntegerType(), True)])
+
+
+def _nullable(ddl: str) -> StructType:
+    """``"name type, ..."`` with every field nullable."""
+    kinds = {
+        "int": IntegerType(),
+        "long": LongType(),
+        "double": DoubleType(),
+        "string": StringType(),
+        "timestamp_ntz": TimestampNTZType(),
+        "array<float>": ArrayType(FloatType(), True),
+    }
+    return StructType(
+        [
+            StructField(name, kinds[kind], True)
+            for name, kind in (f.strip().split(" ", 1) for f in ddl.split(","))
+        ]
+    )
+
+
+FIXTURE_SCHEMAS = {
+    "region": _nullable("r_regionkey int, r_name string"),
+    "nation": _nullable("n_nationkey int, n_name string, n_regionkey int"),
+    "customer": _nullable(
+        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
+        " c_mktsegment string"
+    ),
+    "supplier": _nullable(
+        "s_suppkey long, s_name string, s_nationkey int, s_acctbal double"
+    ),
+    "part": _nullable(
+        "p_partkey long, p_name string, p_brand string, p_type string,"
+        " p_size int, p_retailprice double"
+    ),
+    "orders": _nullable(
+        "o_orderkey long, o_custkey long, o_orderstatus string,"
+        " o_totalprice double, o_orderdate timestamp_ntz,"
+        " o_orderpriority string"
+    ),
+    "lineitem": _nullable(
+        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
+        " l_quantity double, l_extendedprice double, l_discount double,"
+        " l_tax double, l_returnflag string, l_linestatus string,"
+        " l_shipdate timestamp_ntz"
+    ),
+    "events": _nullable(
+        "event_id long, ts timestamp_ntz, user_id long, event_type string,"
+        " value double, props string"
+    ),
+    "documents": _nullable(
+        "doc_id long, text string, lang string, source string, n_chars long"
+    ),
+    "embeddings": _nullable(
+        "vec_id long, embedding array<float>, label int"
+    ),
+}

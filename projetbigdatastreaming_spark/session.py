@@ -52,22 +52,6 @@ def get_session(
     if hive_support:
         builder = builder.enableHiveSupport()
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-    # AQE initial reduce-side width factor (round 15, VERDICT r14
-    # item 5) — MEASURED AND REVERTED TO 1 LOCALLY: factor 4 (128
-    # initial partitions on local[32]) was A/B'd per guide §1 and
-    # made several mid-size sf10 shuffles 2-3x SLOWER
-    # (ngram_entropy_rate 3.5 -> 8.6 s, dedup_incremental_bloom
-    # 3.3 -> 8.6 s; factor toggled with everything else fixed) — at
-    # these byte sizes the M x R shuffle-block explosion and task
-    # overhead dominate any straggler smoothing (guide §2.2: fewer,
-    # larger partitions).  The knob stays for real clusters, where
-    # initialPartitionNum should exceed total cores so AQE can
-    # coalesce DOWN from data-sized widths (set
-    # SPARK_GRAFT_INITIAL_PARTS_FACTOR on the cluster profile);
-    # factor 1 keeps the driver's local bench on the r14 geometry.
-    initial_factor = int(
-        os.environ.get("SPARK_GRAFT_INITIAL_PARTS_FACTOR", "1")
-    )
     conf = {
         # reference parity: SparkBigData.scala:21,28 enables cross joins
         "spark.sql.crossJoin.enabled": "true",
@@ -76,7 +60,7 @@ def get_session(
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(
-            max(1, initial_factor) * n_shuffle
+            n_shuffle
         ),
         "spark.sql.adaptive.skewJoin.enabled": "true",
         # let AQE rewrite a planned sort-merge join into a shuffled
@@ -84,9 +68,7 @@ def get_session(
         # (runtime size check — at 100 TB the partitions exceed the
         # threshold and the spill-safe SMJ stays), skipping the sort
         # of both sides (guide §3.1)
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": (
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "128m")
-        ),
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "128m",
         # deterministic event-time semantics + oracle parity
         "spark.sql.session.timeZone": "UTC",
         # fast pandas/Arrow interop for the Pandas-UDF operators

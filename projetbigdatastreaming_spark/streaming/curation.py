@@ -463,7 +463,6 @@ def read_drift_metrics(spark: SparkSession, metric_dir: str) -> DataFrame:
 # BM25 relevance screen at the ingest boundary (round 9)
 # ---------------------------------------------------------------------------
 
-BM25_STATS_SCHEMA_HINT = "built by build_bm25_stats; read whole-file"
 BM25_SCORE_SCHEMA = "doc_id long, bm25 double, batch_id int"
 
 

@@ -268,3 +268,38 @@ def test_minhash_cross_overlapping_id_spaces(spark):
     # unrelated id 2 never flags despite sharing an id
     assert (0, 0) in got and (1, 0) in got
     assert not any(b == 2 for _, b in got)
+
+
+def test_shingle_hash_rel_matches_hashed_word_shingles(spark):
+    """The codegen kernel's hash set per doc equals xxhash64 over
+    ``functions.text.word_shingles`` (the string-shingle form): docs
+    of fewer than three tokens hash the whole text, repeated shingles
+    collapse to one hash."""
+    from pyspark.sql import functions as F
+
+    from projetbigdatastreaming_spark.functions.text import word_shingles
+
+    docs = _docs(
+        spark,
+        [
+            "",
+            "solo",
+            "two words",
+            "a b c a b c a b c",  # 3 distinct shingles, 7 occurrences
+            "x x x x x",  # 1 distinct shingle
+            BASE,
+            NEAR,
+            OTHER,
+        ],
+    )
+    got = {
+        r.doc_id: sorted(r.sh_hashes)
+        for r in dedup.shingle_hash_rel(docs).collect()
+    }
+    hashed = F.transform(word_shingles("text"), lambda s: F.xxhash64(s))
+    want = {
+        r.doc_id: sorted(r.h)
+        for r in docs.select("doc_id", hashed.alias("h")).collect()
+    }
+    assert got == want
+    assert len(got[3]) == 3 and len(got[4]) == 1

@@ -24,7 +24,7 @@ def _write_events(spark, tmp_path, rows):
     ]
     spark.createDataFrame(
         data,
-        "event_id long, ts timestamp, user_id long, event_type string,"
+        "event_id long, ts timestamp_ntz, user_id long, event_type string,"
         " value double, props string",
     ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
     return str(tmp_path)

@@ -46,12 +46,17 @@ def main() -> None:
 
     from projetbigdatastreaming_spark.session import get_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # every core this process may use and a quarter of physical memory
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = f"{max(1024, mem // 4 // 2**20)}m"
     spark = get_session(
         app_name="bench_one",
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
-        extra_conf={"spark.driver.memory": "48g"},
+        extra_conf={"spark.driver.memory": heap},
     )
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entrymod
