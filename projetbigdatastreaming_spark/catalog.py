@@ -11,15 +11,21 @@ Contract of :func:`load_table`:
 - **Declared schemas.** A table is read with
   ``spark.read.schema(S).parquet(path)``, ``S`` from
   ``schemas.FIXTURE_SCHEMAS`` (all nullable, as a parquet scan infers):
-  no schema-inference job, no cache, one path for every directory.
-- **Footer check.** First the driver reads the parquet footer with
-  pyarrow (a directory table's first data file) and compares each
-  column's parquet physical/logical type with its declared field.  The
-  arrow view cannot decide: it reports INT96 as ``timestamp[ns]`` too.
+  no schema-inference job, one path for every directory.
+- **Footer check.** Before that read the driver reads the parquet
+  footer with pyarrow (a directory table's first data file) and
+  compares each column's parquet physical/logical type with its
+  declared field.  The arrow view cannot decide: it reports INT96 as
+  ``timestamp[ns]`` too.
+- **Kept per file identity.** The checked DataFrame is kept (a bounded
+  LRU) per session and (path, size, mtime, inode) of each data file, so
+  a repeated call costs a ``stat`` per file, not a ~10 ms relation
+  build (py4j round trips, DataSource resolution).  A rewritten, added
+  or removed data file changes the key and is checked and read afresh.
 - **One exception.** ``events.ts`` stored as ``TIMESTAMP(NANOS)`` (an
-  older fixture vintage) reads as nanos-longs under
-  ``spark.sql.legacy.parquet.nanosAsLong`` and is truncated to µs
-  ``timestamp_ntz``.
+  older fixture vintage) reads as nanos-longs under a declared
+  ``LongType`` field, whatever ``spark.sql.legacy.parquet.nanosAsLong``
+  says, and is truncated to µs ``timestamp_ntz``.
 - **Fail loud.** Any other difference raises ``ValueError`` naming path,
   column, stored and expected type: a missing or undeclared column,
   another type, an unannotated INT64 ``ts`` (unit unknown), a
@@ -29,6 +35,7 @@ Contract of :func:`load_table`:
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -72,15 +79,23 @@ def _stored(column) -> str:
     return f"LIST<{kind}>" if column.max_repetition_level else kind
 
 
-def _check_footer(path: str, name: str) -> bool:
-    """Raise unless the stored types match the declared schema; True
-    iff ``events.ts`` is the ``TIMESTAMP(NANOS)`` vintage."""
+def _data_files(path: str) -> list[str]:
+    """A table's parquet data files: the file itself, or a directory
+    table's part files."""
+    if not os.path.isdir(path):
+        return [path]
+    files = sorted(glob.glob(os.path.join(glob.escape(path), "[!_]*.parquet")))
+    if not files:
+        raise ValueError(f"{path}: directory holds no parquet data file")
+    return files
+
+
+def _check_footer(path: str, file: str, name: str) -> bool:
+    """Raise unless ``file``'s stored types match the declared schema;
+    True iff ``events.ts`` is the ``TIMESTAMP(NANOS)`` vintage."""
     import pyarrow.parquet as pq
 
-    files = sorted(glob.glob(os.path.join(glob.escape(path), "[!_]*.parquet")))
-    if os.path.isdir(path) and not files:
-        raise ValueError(f"{path}: directory holds no parquet data file")
-    with pq.ParquetFile(files[0] if files else path) as footer:
+    with pq.ParquetFile(file) as footer:
         leaves = map(footer.schema.column, range(len(footer.schema)))
         found = {c.path.split(".")[0]: _stored(c) for c in leaves}
     want = {f.name: _expected(f.dataType) for f in FIXTURE_SCHEMAS[name]}
@@ -102,12 +117,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
+    stats = [(f, os.stat(f)) for f in _data_files(path)]
+    key = tuple((f, s.st_size, s.st_mtime_ns, s.st_ino) for f, s in stats)
+    return _declared_read(spark, path, name, key)
+
+
+@functools.lru_cache(maxsize=64)
+def _declared_read(
+    spark: SparkSession, path: str, name: str, files: tuple
+) -> DataFrame:
+    """``files``: (file, size, mtime, inode) of each data file."""
     schema = FIXTURE_SCHEMAS[name]
-    if not _check_footer(path, name):
+    if not _check_footer(path, files[0][0], name):
         return spark.read.schema(schema).parquet(path)
-    # the vectorized reader rejects TIMESTAMP(NANOS) unless this conf
-    # surfaces it as raw nanos-longs (it changes nothing else)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ts_long = StructField("ts", LongType())
     as_long = StructType([ts_long if f.name == "ts" else f for f in schema])
     # Integer `div`: a double division would lose precision at 1e18 ns,
@@ -163,9 +185,8 @@ def register_views(
     """Register fixture tables as temp views; returns the DataFrames.
 
     ``only`` restricts registration to the tables a query actually
-    reads: each registration is a driver-side footer check plus a
-    DataFrame and view build (no Spark job), which a one-table SQL
-    query need not pay ten times.
+    reads: each registration is a ``load_table`` (no Spark job) plus a
+    view build, which a one-table SQL query need not pay ten times.
     """
     dfs = {}
     for name in only or TABLES:

@@ -122,29 +122,26 @@ def shingle_hash_rel(docs: DataFrame, text_col: str = "text") -> DataFrame:
     toks = docs.select(
         "doc_id", F.split(F.col(text_col), " ").alias("toks")
     )
-    # both branches name their struct fields (w1, w2, w3):
-    # arrays_zip's own names for unnamed inputs are version-dependent
-    zipped = F.expr(
-        """
+    # both branches are arrays_zip, so their struct types agree under
+    # any version's field naming; inline names the fields by position
+    zipped = """
         CASE WHEN size(toks) >= 3
-             THEN CAST(arrays_zip(slice(toks, 1, size(toks) - 2),
-                                  slice(toks, 2, size(toks) - 2),
-                                  slice(toks, 3, size(toks) - 2))
-                       AS array<struct<w1: string, w2: string, w3: string>>)
-             ELSE array(named_struct('w1', concat_ws(' ', toks),
-                                     'w2', CAST(NULL AS STRING),
-                                     'w3', CAST(NULL AS STRING)))
+             THEN arrays_zip(slice(toks, 1, size(toks) - 2),
+                             slice(toks, 2, size(toks) - 2),
+                             slice(toks, 3, size(toks) - 2))
+             ELSE arrays_zip(array(concat_ws(' ', toks)),
+                             array(CAST(NULL AS STRING)),
+                             array(CAST(NULL AS STRING)))
         END
         """
-    )
-    ex = toks.select("doc_id", F.explode(zipped).alias("s"))
+    ex = toks.selectExpr("doc_id", f"inline({zipped}) AS (w1, w2, w3)")
     hashed = ex.select(
         "doc_id",
         F.xxhash64(
             # concat_ws skips NULLs, so the short-doc row hashes
             # exactly concat_ws(' ', toks) — the word_shingles
             # fallback value
-            F.expr("concat_ws(' ', s.w1, s.w2, s.w3)")
+            F.expr("concat_ws(' ', w1, w2, w3)")
         ).alias("h"),
     )
     return hashed.groupBy("doc_id").agg(

@@ -51,6 +51,36 @@ def test_load_runs_no_spark_job(spark, sf_dir, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
 
 
+def test_repeat_load_reuses_checked_read(spark, sf_dir):
+    """A second call for unchanged files returns the same DataFrame: a
+    query pays the relation build once per table, not once per call."""
+    for name in TABLES:
+        assert load_table(spark, sf_dir, name) is load_table(
+            spark, sf_dir, name
+        ), name
+
+
+def test_rewritten_files_are_read_afresh(spark, sf_dir, tmp_path):
+    """A rewritten file, and a part file added to a directory table,
+    change the key: the next load checks and reads the new files."""
+    region = pq.read_table(os.path.join(sf_dir, "region.parquet"))
+    out = str(tmp_path / "region.parquet")
+    pq.write_table(region, out)
+    assert load_table(spark, str(tmp_path), "region").count() == 5
+    pq.write_table(region.slice(0, 2), out)
+    assert load_table(spark, str(tmp_path), "region").count() == 2
+    pq.write_table(region.append_column("r_extra", pa.array([0] * 5)), out)
+    with pytest.raises(ValueError, match="r_extra"):
+        load_table(spark, str(tmp_path), "region")
+
+    table_dir = tmp_path / "parts" / "region.parquet"
+    table_dir.mkdir(parents=True)
+    pq.write_table(region, str(table_dir / "part-0.parquet"))
+    assert load_table(spark, str(tmp_path / "parts"), "region").count() == 5
+    pq.write_table(region, str(table_dir / "part-1.parquet"))
+    assert load_table(spark, str(tmp_path / "parts"), "region").count() == 10
+
+
 def test_spark_written_directory_tables_load(spark, sf_dir, tmp_path):
     """A Spark-written copy (a directory of part files, as
     tools/gen_scale.py writes) loads under the same declared schemas
@@ -79,22 +109,30 @@ def _rewrite_events(sf_dir, out_dir, ts=None, drop=None, **write_kw):
     return out_dir
 
 
-def test_nanos_vintage_reads_as_micros(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("nanos_as_long", ["true", "false"])
+def test_nanos_vintage_reads_as_micros(spark, sf_dir, tmp_path, nanos_as_long):
     """events.ts stored as TIMESTAMP(NANOS) yields the same timestamps
-    as the µs fixture, under the declared schema."""
+    as the µs fixture, under the declared schema, with or without the
+    legacy nanosAsLong conf (a plain SparkSession leaves it off)."""
     nanos_dir = _rewrite_events(
         sf_dir, str(tmp_path), ts=lambda c: c.cast(pa.timestamp("ns"))
     )
     stored = pq.ParquetFile(os.path.join(nanos_dir, "events.parquet"))
     ts = stored.schema.column(1)
     assert ts.name == "ts" and "nanoseconds" in str(ts.logical_type)
-    got = load_table(spark, nanos_dir, "events")
-    assert got.schema == FIXTURE_SCHEMAS["events"]
-    want = load_table(spark, sf_dir, "events")
-    pairs = lambda df: sorted(  # noqa: E731
-        (r.event_id, r.ts) for r in df.select("event_id", "ts").collect()
-    )
-    assert pairs(got) == pairs(want)
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, nanos_as_long)
+    try:
+        got = load_table(spark, nanos_dir, "events")
+        assert got.schema == FIXTURE_SCHEMAS["events"]
+        want = load_table(spark, sf_dir, "events")
+        pairs = lambda df: sorted(  # noqa: E731
+            (r.event_id, r.ts) for r in df.select("event_id", "ts").collect()
+        )
+        assert pairs(got) == pairs(want)
+    finally:
+        spark.conf.set(conf, before)
 
 
 @pytest.mark.parametrize(

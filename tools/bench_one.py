@@ -44,14 +44,11 @@ def main() -> None:
     if args.media_scaled:
         os.environ["SPARK_GRAFT_MEDIA_SCALED"] = "1"
 
+    from perfbench.run import box_fit
     from projetbigdatastreaming_spark.session import get_session
 
-    # every core this process may use and a quarter of physical memory
-    cpus = int(
-        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
-    )
-    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    heap = f"{max(1024, mem // 4 // 2**20)}m"
+    cores, heap = box_fit()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", cores))
     spark = get_session(
         app_name="bench_one",
         master=f"local[{cpus}]",

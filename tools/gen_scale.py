@@ -254,18 +254,15 @@ if __name__ == "__main__":
     sys.path.insert(
         0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
+    from perfbench.run import box_fit
     from projetbigdatastreaming_spark.session import get_session
 
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out = sys.argv[2] if len(sys.argv) > 2 else ".bench_sf1"
-    # every core this process may use and a quarter of physical memory
-    cores = len(os.sched_getaffinity(0))
-    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    heap = f"{max(1024, mem // 4 // 2**20)}m"
+    cores, heap = box_fit()
     spark = get_session(
         app_name="gen_scale",
         master=f"local[{cores}]",
-        shuffle_partitions=cores,
         extra_conf={"spark.driver.memory": heap},
     )
     ensure_scaled(spark, src, out, int(os.environ.get("FACTOR", "10")))
