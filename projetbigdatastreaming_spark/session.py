@@ -77,13 +77,6 @@ def get_session(
         "spark.sql.shuffle.partitions": str(n_shuffle),
         # keep partition sizes bounded for 100TB scans
         "spark.sql.files.maxPartitionBytes": "134217728",
-        # TIMESTAMP(NANOS) parquet (one events fixture vintage) surfaces
-        # as raw nanos-longs instead of failing the vectorized reader;
-        # catalog.load_table converts after a footer check.  NOTE: this
-        # is session-global and affects every parquet read — a nanos
-        # column in ANY table reads as long under it (µs/ms files are
-        # unaffected).  Set here once rather than leaking mid-session.
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
     }
     if warehouse_dir:
         conf["spark.sql.warehouse.dir"] = warehouse_dir

@@ -42,10 +42,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.llmdata import (
+    BM25_TERMS,
     dsir_doc_bucket_tf,
     dsir_score,
     substring_doc_fp_counts,
@@ -350,9 +351,10 @@ def exact_dedup_screen_writer(
                     spark.read.schema("fp string, batch_id int")
                     .parquet(fps_dir)
                     .where(F.col("batch_id") != int(batch_id))
-                    .select("fp")
-                    .distinct(),
+                    .select("fp"),
                     "fp",
+                    # a semi-join ignores right-side duplicates, so the
+                    # corpus-sized history is not deduplicated first
                     "left_semi",
                 )
             else:
@@ -402,47 +404,65 @@ def build_drift_reference(docs: DataFrame, ref_dir: str) -> int:
 
 def drift_monitor_writer(
     ref_dir: str, metric_dir: str
-) -> Callable[[DataFrame, int], None]:
+) -> Callable[[DataFrame, int], list]:
     """foreachBatch sink: PSI-score each incoming batch's feature
     distributions against the frozen reference and append one
     (feature, psi, batch_id) metric row per feature — the live "did
-    the incoming data move?" alarm (alert bars 0.1 / 0.25).
+    the incoming data move?" alarm (alert bars 0.1 / 0.25).  Returns
+    the batch's (feature, psi) rows, ordered by feature, so a caller
+    can gate on them without reading the metric back.
 
     The PSI math is `plans/quality.psi_from_counts` VERBATIM (the
     batch query `psi_drift`'s second half), so stream and batch
     cannot drift on the drift metric itself — pinned by test.
 
-    Scale: per batch, one map-side-combined hash-agg of the batch to
-    ≤ bins rows, a broadcast join against the KB reference, and a
-    |features|-row partition restatement.  Replay: at-least-once
+    Scale: three jobs per batch.  One single-task job folds the batch
+    to ≤ bins (feature, bin) counts, full-outer-joined with the KB
+    reference, and checkpoints them, because `psi_from_counts` reads
+    its input twice; the PSI's broadcast and the |features|-row
+    partition restatement follow, and the restatement observes the
+    metric rows it writes, so nothing reads them back.  Every relation
+    stays in one partition, so no step shuffles: one task reads a
+    micro-batch's few columns faster than a shuffle would split them.
+    Replay: at-least-once
     redelivery REWRITES its own batch_id partition (the module-wide
     restatement contract), and the reader's natural-key dedup absorbs
     any historical appends."""
     from ..plans.quality import drift_feature_bins, psi_from_counts
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
+    def write(batch_df: DataFrame, batch_id: int) -> list:
         spark = batch_df.sparkSession
         ref = spark.read.schema(DRIFT_REF_SCHEMA).parquet(ref_dir)
+        # one partition on both sides: the aggregate and the join need
+        # no exchange
         cur = (
-            drift_feature_bins(batch_df)
+            drift_feature_bins(batch_df.coalesce(1))
             .groupBy("feature", "bin")
             .agg(F.count("*").cast("long").alias("cur_cnt"))
         )
         # full outer on (feature, bin): a bin present in only one side
         # still contributes its smoothed term
         counts = (
-            ref.join(cur, ["feature", "bin"], "full_outer")
+            ref.coalesce(1)
+            .join(cur, ["feature", "bin"], "full_outer")
             .select(
                 "feature",
                 "bin",
                 F.coalesce("ref_cnt", F.lit(0)).alias("ref_cnt"),
                 F.coalesce("cur_cnt", F.lit(0)).alias("cur_cnt"),
             )
+            # eager: psi_from_counts reads its input twice
+            .localCheckpoint()
         )
-        metrics = psi_from_counts(counts).withColumn(
-            "batch_id", F.lit(int(batch_id))
+        obs = Observation()
+        overwrite_partitions(
+            psi_from_counts(counts.coalesce(1))
+            .withColumn("batch_id", F.lit(int(batch_id)))
+            .observe(obs, F.collect_list(F.struct("feature", "psi")).alias("m")),
+            metric_dir,
+            ["batch_id"],
         )
-        overwrite_partitions(metrics.coalesce(1), metric_dir, ["batch_id"])
+        return sorted(obs.get["m"], key=lambda r: r.feature)
 
     return write
 
@@ -464,6 +484,11 @@ def read_drift_metrics(spark: SparkSession, metric_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 BM25_SCORE_SCHEMA = "doc_id long, bm25 double, batch_id int"
+
+#: the one statistics row `build_bm25_stats` freezes
+BM25_STATS_SCHEMA = "n_docs bigint, sum_dl bigint, " + ", ".join(
+    f"df{i} bigint" for i in range(len(BM25_TERMS))
+)
 
 
 def build_bm25_stats(docs: DataFrame, ref_dir: str) -> None:
@@ -498,7 +523,7 @@ def bm25_screen_writer(
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        stats = spark.read.parquet(ref_dir)
+        stats = spark.read.schema(BM25_STATS_SCHEMA).parquet(ref_dir)
         scored = bm25_scored(bm25_per_doc(batch_df), stats).withColumn(
             "batch_id", F.lit(int(batch_id))
         )

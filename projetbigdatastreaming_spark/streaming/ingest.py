@@ -21,7 +21,9 @@ own partitions in every table it touched.
 
 Scale: stage 1 is codegen predicates; stage 2's cost tracks near-dup
 density (band equi-joins); stage 3 writes ≤ d·w rows per batch.  The
-batch DataFrame is cached once and consumed by all three stages.
+batch is cached and probed for emptiness once; the gated rows are a
+filter over that cache.  `full_ingest_writer` also signs the gated
+batch once for both of its MinHash screens.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-from .neardup import near_dup_batch_writer
+from .neardup import near_dup_batch_writer, sign_batch
 from .runner import quality_gate_writer
 from .sketches import cms_batch_writer
 
@@ -57,13 +59,13 @@ def curation_ingest_writer(
     cms = cms_batch_writer(cms_state_dir, cms_key_col)
 
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         from pyspark.sql import functions as F
 
         batch_df = batch_df.cache()
         try:
-            gate(batch_df, batch_id)
+            if batch_df.isEmpty():
+                return
+            gate(batch_df, batch_id, probe=False)
             # downstream stages see only gated rows — the gate's EXACT
             # routing semantics (codegen, evaluated again on the
             # cached batch rather than re-read from the good table).
@@ -142,9 +144,8 @@ def full_ingest_writer(
     computed the alert bars' input and nothing consumed them):
 
     * ``psi_alert_threshold`` — the drift metric lands FIRST and the
-      batch's max PSI is read back (a ≤|features|-row metric
-      relation; the one-row ``first()`` is metadata-bounded like the
-      DESCRIBE reads, not a data collect).  A batch over the bar is
+      gate takes the batch's max PSI from the ≤|features| metric rows
+      the drift stage returns (nothing is read back).  A batch over the bar is
       POPULATION-shifted: the whole batch lands in
       ``drift_quarantine_dir`` with the offending metric attached
       (feature + psi columns), and EVERY stateful stage is skipped —
@@ -159,10 +160,14 @@ def full_ingest_writer(
       dups/contamination (the score partition is the record; the
       admission anti-join reads it back).
 
-    Scale: the batch is cached once and consumed by all stages; each
-    stage is the documented bounded shape (codegen gate, Bloom
-    broadcast + hit-sliver join, frozen broadcast probes, ≤bins/1-row
-    stats, band equi-join, ≤d·w fold, one parquet write)."""
+    Scale: the batch is cached and probed for emptiness once, and no
+    stage probes again; the gated rows are a filter over that cache.
+    Both MinHash screens (3 and 6) read one signed relation
+    (`neardup.sign_batch`), persisted for the two of them, so the
+    batch is shingled and signed once.  Each stage is the documented
+    bounded shape (codegen gate, Bloom broadcast + hit-sliver join,
+    frozen broadcast probes, ≤bins/1-row stats, band equi-join, ≤d·w
+    fold, one parquet write)."""
     from ..sinks.versioned import versioned_append_batch
     from .curation import (
         bm25_screen_writer,
@@ -190,8 +195,6 @@ def full_ingest_writer(
     cms = cms_batch_writer(cms_state_dir, cms_key_col)
 
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         import os
 
         from pyspark.sql import functions as F
@@ -199,7 +202,11 @@ def full_ingest_writer(
         spark = batch_df.sparkSession
         batch_df = batch_df.cache()
         try:
-            gate(batch_df, batch_id)
+            # the batch's one emptiness probe; no stage below probes
+            # again
+            if batch_df.isEmpty():
+                return
+            gate(batch_df, batch_id, probe=False)
             passed = batch_df.where(
                 F.expr(
                     " AND ".join(
@@ -208,94 +215,82 @@ def full_ingest_writer(
                 )
                 if checks
                 else F.lit(True)
-            ).cache()
-            try:
-                # the drift metric + gate run BEFORE every stateful
-                # screen: the exact-dedup stage FOLDS the batch's
-                # fingerprints into corpus-so-far state, and a
-                # quarantined batch must pollute no corpus state at
-                # all (a later batch would otherwise flag as a dup of
-                # a document that was never admitted)
-                drift(passed, batch_id)
-
-                if psi_alert_threshold is not None:
+            )
+            # the drift metric + gate run BEFORE every stateful screen:
+            # the exact-dedup stage FOLDS the batch's fingerprints into
+            # corpus-so-far state, and a quarantined batch must pollute
+            # no corpus state at all (a later batch would otherwise
+            # flag as a dup of a document that was never admitted)
+            metrics = drift(passed, batch_id)
+            if psi_alert_threshold is not None:
+                worst = max(
+                    (r for r in metrics if r.psi is not None),
+                    key=lambda r: r.psi,
+                    default=None,
+                )
+                if worst is not None and worst.psi > psi_alert_threshold:
                     from ..sinks.files import overwrite_partitions
-                    from .curation import DRIFT_METRIC_SCHEMA
 
-                    worst = (
-                        spark.read.schema(DRIFT_METRIC_SCHEMA)
-                        .parquet(drift_metric_dir)
-                        .where(F.col("batch_id") == int(batch_id))
-                        .orderBy(F.col("psi").desc())
-                        .first()
+                    quarantined = (
+                        passed.withColumn("drift_feature", F.lit(worst.feature))
+                        .withColumn("psi", F.lit(float(worst.psi)))
+                        .withColumn("batch_id", F.lit(int(batch_id)))
                     )
-                    if (
-                        worst is not None
-                        and worst.psi is not None
-                        and worst.psi > psi_alert_threshold
-                    ):
-                        quarantined = (
-                            passed.withColumn(
-                                "drift_feature", F.lit(worst.feature)
-                            )
-                            .withColumn("psi", F.lit(float(worst.psi)))
-                            .withColumn("batch_id", F.lit(int(batch_id)))
-                        )
-                        overwrite_partitions(
-                            quarantined,
-                            drift_quarantine_dir,
-                            ["batch_id"],
-                        )
-                        return
+                    overwrite_partitions(
+                        quarantined, drift_quarantine_dir, ["batch_id"]
+                    )
+                    return
 
-                dedup(passed, batch_id)
-                contam(passed, batch_id)
-                bm25(passed, batch_id)
-                near(passed, batch_id)
-                cms(passed, batch_id)
-
-                held = None
-                if min_bm25 is not None:
-                    from .curation import BM25_SCORE_SCHEMA
-
-                    held = (
-                        spark.read.schema(BM25_SCORE_SCHEMA)
-                        .parquet(bm25_scores_dir)
-                        .where(
-                            (F.col("batch_id") == int(batch_id))
-                            & (F.col("bm25") < float(min_bm25))
-                        )
-                        .select("doc_id")
-                    )
-                if os.path.isdir(dups_dir):
-                    d = (
-                        spark.read.schema(
-                            "doc_id long, fp string, batch_id int"
-                        )
-                        .parquet(dups_dir)
-                        .where(F.col("batch_id") == int(batch_id))
-                        .select("doc_id")
-                    )
-                    held = d if held is None else held.unionAll(d)
-                if os.path.isdir(contam_flags_dir):
-                    c = (
-                        spark.read.schema(
-                            "doc_a long, doc_b long, jaccard double,"
-                            " batch_id int"
-                        )
-                        .parquet(contam_flags_dir)
-                        .where(F.col("batch_id") == int(batch_id))
-                        .select(F.col("doc_a").alias("doc_id"))
-                    )
-                    held = c if held is None else held.unionAll(c)
-                admitted = passed
-                if held is not None:
-                    admitted = passed.join(
-                        F.broadcast(held.distinct()), "doc_id", "left_anti"
-                    )
-                versioned_append_batch(admitted, table_dir, batch_id)
+            dedup(passed, batch_id)
+            bm25(passed, batch_id)
+            cms(passed, batch_id)
+            # both MinHash screens read one signed relation; signing
+            # probes the gated batch's emptiness
+            signed, nonempty = sign_batch(passed)
+            try:
+                if nonempty:
+                    contam(passed, batch_id, signed=signed)
+                    near(passed, batch_id, signed=signed)
             finally:
-                passed.unpersist()
+                signed.unpersist()
+
+            held = None
+            if min_bm25 is not None:
+                from .curation import BM25_SCORE_SCHEMA
+
+                held = (
+                    spark.read.schema(BM25_SCORE_SCHEMA)
+                    .parquet(bm25_scores_dir)
+                    .where(
+                        (F.col("batch_id") == int(batch_id))
+                        & (F.col("bm25") < float(min_bm25))
+                    )
+                    .select("doc_id")
+                )
+            if os.path.isdir(dups_dir):
+                d = (
+                    spark.read.schema("doc_id long, fp string, batch_id int")
+                    .parquet(dups_dir)
+                    .where(F.col("batch_id") == int(batch_id))
+                    .select("doc_id")
+                )
+                held = d if held is None else held.unionAll(d)
+            if os.path.isdir(contam_flags_dir):
+                c = (
+                    spark.read.schema(
+                        "doc_a long, doc_b long, jaccard double, batch_id int"
+                    )
+                    .parquet(contam_flags_dir)
+                    .where(F.col("batch_id") == int(batch_id))
+                    .select(F.col("doc_a").alias("doc_id"))
+                )
+                held = c if held is None else held.unionAll(c)
+            admitted = passed
+            if held is not None:
+                admitted = passed.join(
+                    F.broadcast(held.distinct()), "doc_id", "left_anti"
+                )
+            versioned_append_batch(admitted, table_dir, batch_id)
         finally:
             batch_df.unpersist()
 

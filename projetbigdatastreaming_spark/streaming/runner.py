@@ -275,14 +275,16 @@ def quality_gate_writer(
     an at-least-once redelivery rewrites its own partitions instead of
     appending duplicates.  The routed split is computed once per batch
     (cached), so each check expression — pure codegen, no Python —
-    runs a single time however many sinks consume it.
+    runs a single time however many sinks consume it.  An empty batch
+    writes nothing; ``probe=False`` skips that check for a caller that
+    already knows the batch is non-empty.
     """
     from pyspark.sql import functions as F
 
     from ..sinks.files import overwrite_partitions
 
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+    def _fn(batch_df: DataFrame, batch_id: int, probe: bool = True) -> None:
+        if probe and batch_df.isEmpty():
             return
         failed = F.array_compact(
             F.array(

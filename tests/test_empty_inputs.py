@@ -16,13 +16,21 @@ def empty_sf_dir(spark, sf_dir, tmp_path_factory):
     """Zero-row copies of every table with the RAW fixture schemas
     (events.ts stays nanos-long, exactly as on disk)."""
     out = tmp_path_factory.mktemp("empty_sf")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    for name in TABLES:
-        (
-            spark.read.parquet(f"{sf_dir}/{name}.parquet")
-            .limit(0)
-            .write.parquet(str(out / f"{name}.parquet"))
-        )
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(conf, None)
+    spark.conf.set(conf, "true")
+    try:
+        for name in TABLES:
+            (
+                spark.read.parquet(f"{sf_dir}/{name}.parquet")
+                .limit(0)
+                .write.parquet(str(out / f"{name}.parquet"))
+            )
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)
     return str(out)
 
 

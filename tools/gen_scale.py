@@ -54,9 +54,10 @@ def build_scaled(
 
     # read through the catalog, NOT raw spark.read.parquet: events.ts
     # has shipped as TIMESTAMP(NANOS) in some fixture vintages, and
-    # load_table normalizes it to a true timestamp — a raw read under
-    # the session-wide nanosAsLong conf would surface LONG nanos and
-    # write an unannotated INT64 ts the sf2 sweep then refuses to read
+    # load_table normalizes it to a true timestamp — an inferred read
+    # refuses that type (or, with spark.sql.legacy.parquet.nanosAsLong
+    # set, surfaces LONG nanos and writes an unannotated INT64 ts the
+    # sf2 sweep then refuses to read)
     rd = lambda t: load_table(spark, src_dir, t)  # noqa: E731
     wr = lambda df, t: df.write.mode("overwrite").parquet(  # noqa: E731
         os.path.join(out_dir, f"{t}.parquet")
