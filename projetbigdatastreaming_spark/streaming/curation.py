@@ -422,8 +422,9 @@ def drift_monitor_writer(
     its input twice; the PSI's broadcast and the |features|-row
     partition restatement follow, and the restatement observes the
     metric rows it writes, so nothing reads them back.  Every relation
-    stays in one partition, so no step shuffles: one task reads a
-    micro-batch's few columns faster than a shuffle would split them.
+    stays in one partition, so no step shuffles: one task folds a
+    micro-batch's few columns as fast as a shuffle would split them,
+    at 200 docs and at 50 000 (`bench_evidence/sign_kernels.txt`).
     Replay: at-least-once
     redelivery REWRITES its own batch_id partition (the module-wide
     restatement contract), and the reader's natural-key dedup absorbs

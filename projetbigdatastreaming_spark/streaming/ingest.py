@@ -21,7 +21,7 @@ own partitions in every table it touched.
 
 Scale: stage 1 is codegen predicates; stage 2's cost tracks near-dup
 density (band equi-joins); stage 3 writes ≤ d·w rows per batch.  The
-batch is cached and probed for emptiness once; the gated rows are a
+batch is cached and checked for emptiness once; the gated rows are a
 filter over that cache.  `full_ingest_writer` also signs the gated
 batch once for both of its MinHash screens.
 """
@@ -65,7 +65,7 @@ def curation_ingest_writer(
         try:
             if batch_df.isEmpty():
                 return
-            gate(batch_df, batch_id, probe=False)
+            gate(batch_df, batch_id)
             # downstream stages see only gated rows — the gate's EXACT
             # routing semantics (codegen, evaluated again on the
             # cached batch rather than re-read from the good table).
@@ -160,11 +160,12 @@ def full_ingest_writer(
       dups/contamination (the score partition is the record; the
       admission anti-join reads it back).
 
-    Scale: the batch is cached and probed for emptiness once, and no
-    stage probes again; the gated rows are a filter over that cache.
-    Both MinHash screens (3 and 6) read one signed relation
-    (`neardup.sign_batch`), persisted for the two of them, so the
-    batch is shingled and signed once.  Each stage is the documented
+    Scale: the batch is cached and checked for emptiness once; the
+    gated rows are a filter over that cache, and the gate's write
+    counts them (no job of its own).  Both MinHash screens (3 and 6)
+    read one signed relation (`neardup.sign_batch`, its kernel picked
+    by that count), persisted for the two of them, so the batch is
+    shingled and signed once.  Each stage is the documented
     bounded shape (codegen gate, Bloom broadcast + hit-sliver join,
     frozen broadcast probes, ≤bins/1-row stats, band equi-join, ≤d·w
     fold, one parquet write)."""
@@ -202,11 +203,11 @@ def full_ingest_writer(
         spark = batch_df.sparkSession
         batch_df = batch_df.cache()
         try:
-            # the batch's one emptiness probe; no stage below probes
-            # again
+            # the batch's one emptiness check; the gate counts the
+            # rows it passes, which picks the signing kernel
             if batch_df.isEmpty():
                 return
-            gate(batch_df, batch_id, probe=False)
+            n_passed = gate(batch_df, batch_id)
             passed = batch_df.where(
                 F.expr(
                     " AND ".join(
@@ -244,15 +245,14 @@ def full_ingest_writer(
             dedup(passed, batch_id)
             bm25(passed, batch_id)
             cms(passed, batch_id)
-            # both MinHash screens read one signed relation; signing
-            # probes the gated batch's emptiness
-            signed, nonempty = sign_batch(passed)
-            try:
-                if nonempty:
+            if n_passed:
+                # both MinHash screens read one signed relation
+                signed = sign_batch(passed, n_passed)
+                try:
                     contam(passed, batch_id, signed=signed)
                     near(passed, batch_id, signed=signed)
-            finally:
-                signed.unpersist()
+                finally:
+                    signed.unpersist()
 
             held = None
             if min_bm25 is not None:

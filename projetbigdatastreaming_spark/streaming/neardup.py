@@ -19,8 +19,9 @@ same replay-safety contract as ``restatement_batch_writer``):
   ``doc_b`` is the incoming document and ``doc_a`` the earlier one
   (or the within-batch pair, doc_a < doc_b)
 
-Scale: per batch, one map-only signing pass over the batch
-(`sign_batch`), then an equi-join of the batch's 16 band keys per doc
+Scale: per batch, one signing pass over the batch (`sign_batch`,
+map-only for small batches, an aggregate for large ones), then an
+equi-join of the batch's 16 band keys per doc
 against the band index, with the batch side broadcast so the index
 streams through a map-side join; candidate volume tracks near-dup
 density exactly as in the batch operator.  The verify reads the
@@ -85,30 +86,58 @@ def retract_docs(
     return write_tombstones(spark, f"{index_dir}/tombstones", doc_ids)
 
 
-def sign_batch(
-    docs: DataFrame, text_col: str = "text"
-) -> tuple[DataFrame, bool]:
-    """The batch's signed relation ``(doc_id, shingles, sh_hashes,
-    sig)``, persisted, and whether it has any row.  Both MinHash
-    screens read it: the shingle strings feed the ``sigs`` state
-    (format v1), the hashes feed the exact verify, the signature feeds
-    the band keys.  The caller unpersists it.
+#: batches of at least this many documents are signed with the
+#: explode+aggregate kernel (`minhash_signatures`), smaller ones with
+#: the per-row form (`with_minhash_signature`); see `sign_batch`
+SIGN_AGG_MIN_DOCS = 5_000
 
-    The signature is the per-row form
-    (`operators/dedup.with_minhash_signature`), values identical to the
-    explode+aggregate kernel (`minhash_signatures`): a micro-batch
-    signs in one map-only job, where the aggregate adds a shuffle and
-    the join back to the shingles.  Measured on 200-doc batches in a
-    warm 4-core session: 0.14-0.24 s and 1 job against 0.8-1.3 s and
-    5 jobs.  The aggregate wins on batches of tens of thousands of
-    documents (its interpreted-lambda-free codegen), which is why the
-    batch queries keep it."""
-    signed = (
-        with_minhash_signature(docs, text_col)
-        .select("doc_id", "shingles", "sh_hashes", "sig")
-        .persist()
-    )
-    return signed, not signed.isEmpty()
+
+def sign_batch(
+    docs: DataFrame, n_docs: int, text_col: str = "text"
+) -> DataFrame:
+    """The batch's signed relation ``(doc_id, shingles, sh_hashes,
+    sig)``, persisted.  Both MinHash screens read it: the shingle
+    strings feed the ``sigs`` state (format v1), the hashes feed the
+    exact verify, the signature feeds the band keys.  The caller
+    unpersists it.  ``doc_id`` must be unique within the batch, as for
+    the verify.
+
+    ``n_docs`` is the batch's size (an upper bound is enough) and
+    picks the kernel; both give identical signatures.  The per-row
+    form is map-only, but its 64 interpreted lambdas run in the
+    batch's own partitions; the aggregate adds an exchange and a join
+    back to the shingles and spreads the signing over the shuffle
+    partitions.  Measured warm on a 4-core box
+    (`bench_evidence/sign_kernels.txt`): at 200 docs the per-row form
+    takes 0.6 s to the aggregate's 1.5 s; at 5 000 docs it wins over
+    four partitions (1.6 s to 2.3 s) and loses in one (3.5 s to
+    2.1 s); at 50 000 docs the aggregate wins 6.5 s to 9.1 s over
+    eight partitions and 12 s to 34 s in two (one large file).
+
+    The relation is filled here, every partition, by one write to the
+    ``noop`` sink: the screens then plan their joins on its measured
+    size (left unfilled, the benchmark screen's plan ran two more
+    jobs), and the aggregate's shingles can be released."""
+    sh = None
+    if n_docs < SIGN_AGG_MIN_DOCS:
+        signed = with_minhash_signature(docs, text_col).select(
+            "doc_id", "shingles", "sh_hashes", "sig"
+        )
+    else:
+        # read by the aggregate and by the join back: shingle once
+        sh = (
+            shingle_rel(docs, text_col)
+            .withColumn(
+                "sh_hashes", F.expr("transform(shingles, x -> xxhash64(x))")
+            )
+            .persist()
+        )
+        signed = sh.join(minhash_signatures(sh), "doc_id")
+    signed = signed.persist()
+    signed.write.format("noop").mode("overwrite").save()
+    if sh is not None:
+        sh.unpersist()
+    return signed
 
 
 def _signed_screen(
@@ -117,8 +146,8 @@ def _signed_screen(
     """foreachBatch callable around a screen over the signed relation.
     Composed (`ingest.full_ingest_writer`), the caller passes
     ``signed=`` for a non-empty batch and owns its cache.  Standalone,
-    the batch is signed here, and signing probes emptiness: an empty
-    batch writes nothing."""
+    the batch is counted (an empty batch writes nothing) and signed
+    here."""
 
     def _fn(
         batch_df: DataFrame, batch_id: int, signed: DataFrame | None = None
@@ -126,10 +155,12 @@ def _signed_screen(
         if signed is not None:
             screen(signed, batch_id)
             return
-        signed, nonempty = sign_batch(batch_df, text_col)
+        n_docs = batch_df.count()
+        if not n_docs:
+            return
+        signed = sign_batch(batch_df, n_docs, text_col)
         try:
-            if nonempty:
-                screen(signed, batch_id)
+            screen(signed, batch_id)
         finally:
             signed.unpersist()
 
@@ -177,6 +208,9 @@ def near_dup_batch_writer(
                 read_pending_tombstones(spark, f"{index_dir}/tombstones"),
                 "doc_id",
             )
+            # the batch side is broadcast: 16 rows per doc, measured
+            # as fast as AQE's own choice at 200 docs and faster at
+            # 50 000 (bench_evidence/sign_kernels.txt)
             cross = (
                 bands_old.alias("a")
                 .join(

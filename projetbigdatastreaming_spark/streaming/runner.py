@@ -261,7 +261,7 @@ def quality_gate_writer(
     checks: dict[str, str],
     good_path: str,
     quarantine_path: str,
-) -> Callable[[DataFrame, int], None]:
+) -> Callable[[DataFrame, int], int]:
     """Streaming data-quality gate for foreachBatch: every micro-batch
     row is evaluated against the declared row-level checks (name →
     boolean SQL expression, true = pass); clean rows land in the good
@@ -276,16 +276,15 @@ def quality_gate_writer(
     appending duplicates.  The routed split is computed once per batch
     (cached), so each check expression — pure codegen, no Python —
     runs a single time however many sinks consume it.  An empty batch
-    writes nothing; ``probe=False`` skips that check for a caller that
-    already knows the batch is non-empty.
+    writes two empty relations, which add no partition.  Returns the
+    number of rows routed to the good table, observed on its write.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from ..sinks.files import overwrite_partitions
 
-    def _fn(batch_df: DataFrame, batch_id: int, probe: bool = True) -> None:
-        if probe and batch_df.isEmpty():
-            return
+    def _fn(batch_df: DataFrame, batch_id: int) -> int:
         failed = F.array_compact(
             F.array(
                 *[
@@ -302,8 +301,11 @@ def quality_gate_writer(
             bad = flagged.where(F.size("violations") > 0).withColumn(
                 "violations", F.concat_ws(",", "violations")
             )
+            obs = Observation()
             overwrite_partitions(
-                good.withColumn("batch_id", F.lit(batch_id)),
+                good.withColumn("batch_id", F.lit(batch_id)).observe(
+                    obs, F.count(F.lit(1)).alias("n")
+                ),
                 good_path,
                 ["batch_id"],
             )
@@ -317,6 +319,7 @@ def quality_gate_writer(
                 batch_id,
                 ",".join(sorted(checks)),
             )
+            return obs.get["n"]
         finally:
             flagged.unpersist()
 

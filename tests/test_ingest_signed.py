@@ -161,3 +161,29 @@ def test_standalone_screens_on_empty_batch(spark, tmp_path):
             assert partitions(out) == [], out
     cur.drift_monitor_writer(d("drift_ref"), d("drift"))(empty, 0)
     assert len(partitions("drift")) == 1
+
+
+def test_sign_batch_kernels_agree(spark):
+    """Below `SIGN_AGG_MIN_DOCS` the batch signs per row (no
+    aggregate in the plan), at or above it through the aggregate;
+    both give the same relation."""
+    docs = _docs(
+        spark,
+        [(1, " ".join(W)), (2, _variant("X")), (3, "a b"), (4, ""), (5, BENCH)],
+    )
+
+    def sign(n_docs):
+        signed = nd.sign_batch(docs, n_docs)
+        plan = signed._jdf.queryExecution().executedPlan().toString()
+        rows = sorted(
+            (r.doc_id, sorted(r.shingles), sorted(r.sh_hashes), r.sig)
+            for r in signed.collect()
+        )
+        signed.unpersist()
+        return "HashAggregate" in plan, rows
+
+    agg_row, by_row = sign(5)
+    agg_agg, by_agg = sign(nd.SIGN_AGG_MIN_DOCS)
+    assert (agg_row, agg_agg) == (False, True)
+    assert len(by_row) == 5
+    assert by_row == by_agg
