@@ -33,7 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 
 from .neardup import near_dup_batch_writer, sign_batch
-from .runner import quality_gate_writer
+from .runner import gate_passed, quality_gate_writer
 from .sketches import cms_batch_writer
 
 
@@ -59,30 +59,13 @@ def curation_ingest_writer(
     cms = cms_batch_writer(cms_state_dir, cms_key_col)
 
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         batch_df = batch_df.cache()
         try:
             if batch_df.isEmpty():
                 return
             gate(batch_df, batch_id)
-            # downstream stages see only gated rows — the gate's EXACT
-            # routing semantics (codegen, evaluated again on the
-            # cached batch rather than re-read from the good table).
-            # The gate flags a violation only when ~expr is TRUE, so a
-            # NULL-evaluating check PASSES ("value > 0" with NULL
-            # value routes to the good table); a bare WHERE would drop
-            # NULL and silently exclude those documents from the
-            # near-dup index and CMS — hence coalesce(expr, true)
-            passed = batch_df.where(
-                F.expr(
-                    " AND ".join(
-                        f"coalesce(({e}), true)" for e in checks.values()
-                    )
-                )
-                if checks
-                else F.lit(True)
-            )
+            # downstream stages see only gated rows
+            passed = gate_passed(batch_df, checks)
             near(passed, batch_id)
             cms(passed, batch_id)
         finally:
@@ -118,7 +101,8 @@ def full_ingest_writer(
     publish of the admitted set —
 
     1. quality gate (violators → quarantine with failed-check names)
-    2. Bloom-accelerated EXACT-dedup screen vs the corpus so far
+    2. EXACT-dedup screen: the batch's fingerprints semi-joined
+       against the corpus-so-far fingerprint table
     3. fuzzy DECONTAMINATION vs the frozen benchmark band index
     4. PSI drift metric vs the frozen reference distribution
     5. BM25 relevance score under the frozen corpus statistics
@@ -166,9 +150,10 @@ def full_ingest_writer(
     read one signed relation (`neardup.sign_batch`, its kernel picked
     by that count), persisted for the two of them, so the batch is
     shingled and signed once.  Each stage is the documented
-    bounded shape (codegen gate, Bloom broadcast + hit-sliver join,
-    frozen broadcast probes, ≤bins/1-row stats, band equi-join, ≤d·w
-    fold, one parquet write)."""
+    bounded shape (codegen gate, frozen broadcast probes, ≤bins/1-row
+    stats, band equi-join, ≤d·w fold, one parquet write) except the
+    exact-dedup screen, whose semi-join scans the whole fingerprint
+    history every batch (`curation.exact_dedup_screen_writer`)."""
     from ..sinks.versioned import versioned_append_batch
     from .curation import (
         bm25_screen_writer,
@@ -208,15 +193,7 @@ def full_ingest_writer(
             if batch_df.isEmpty():
                 return
             n_passed = gate(batch_df, batch_id)
-            passed = batch_df.where(
-                F.expr(
-                    " AND ".join(
-                        f"coalesce(({e}), true)" for e in checks.values()
-                    )
-                )
-                if checks
-                else F.lit(True)
-            )
+            passed = gate_passed(batch_df, checks)
             # the drift metric + gate run BEFORE every stateful screen:
             # the exact-dedup stage FOLDS the batch's fingerprints into
             # corpus-so-far state, and a quarantined batch must pollute

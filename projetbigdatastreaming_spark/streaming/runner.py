@@ -277,7 +277,8 @@ def quality_gate_writer(
     (cached), so each check expression — pure codegen, no Python —
     runs a single time however many sinks consume it.  An empty batch
     writes two empty relations, which add no partition.  Returns the
-    number of rows routed to the good table, observed on its write.
+    number of rows routed to the good table, observed on its write;
+    `gate_passed` gives the same rows as a filter for later stages.
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -324,3 +325,20 @@ def quality_gate_writer(
             flagged.unpersist()
 
     return _fn
+
+
+def gate_passed(batch_df: DataFrame, checks: dict[str, str]) -> DataFrame:
+    """The rows of ``batch_df`` that `quality_gate_writer` routes to
+    the good table, as a filter (the gate's routing evaluated again,
+    not its good table read back).  The gate flags a check only when
+    ~expr is TRUE, so a NULL-evaluating check PASSES ("value > 0" with
+    NULL value routes to the good table); a bare WHERE would drop NULL
+    and silently exclude those rows from every later stage — hence
+    coalesce(expr, true)."""
+    from pyspark.sql import functions as F
+
+    if not checks:
+        return batch_df
+    return batch_df.where(
+        F.expr(" AND ".join(f"coalesce(({e}), true)" for e in checks.values()))
+    )

@@ -444,54 +444,73 @@ def compact_bloom(spark: SparkSession, state_dir: str) -> int:
     bit_or is IDEMPOTENT as well as associative: a reader folding any
     crash-state combination of {source partitions, staged fold, set-
     aside old base, promoted base} computes the same membership bits —
-    duplicate copies cannot double-count.  The only invariant the
-    sequence below maintains is durability: source partitions are
-    deleted strictly AFTER the staged fold is durably promoted-or-
-    stageable, and the old base is renamed aside (never deleted) until
-    the new base exists, so no bit ever exists solely in driver
-    memory.  A crash at ANY point leaves a state the next compaction
-    simply refolds; `read_bloom` needs no changes (it already folds
-    every partition, staging and aside included).
+    duplicate copies cannot double-count (`_restate_base`).
+    `read_bloom` needs no changes (it already folds every partition,
+    staging and aside included).
 
     Safe while the stream runs, like `compact_cms`: only the
     snapshot's partitions are deleted — a batch landing mid-compaction
     is neither consumed nor removed (its bits are in its own
     partition, which the fold-union keeps correct).
     """
+    return _restate_base(
+        spark,
+        state_dir,
+        lambda ids: spark.read.parquet(state_dir)
+        .where(F.col("batch_id").isin(ids))
+        .groupBy("word")
+        .agg(F.bit_or("bits").alias("bits")),
+        done=lambda ids: ids in ([], [BASE_ID]),
+    )
+
+
+def _restate_base(
+    spark: SparkSession,
+    state_dir: str,
+    fold: Callable[[list[int]], DataFrame],
+    done: Callable[[list[int]], bool] = lambda ids: False,
+) -> int:
+    """Replace the snapshot partitions of an IDEMPOTENT-fold state dir
+    (Bloom bit_or, KMV min-k, rows unique per natural key behind a
+    deduping reader) with one base partition (``batch_id=-1``) holding
+    ``fold(ids)`` — rows without a batch_id column, folded from the
+    snapshot ``ids`` or rebuilt from elsewhere.  Returns the base's row
+    count.  ``done(ids)`` says the state is already in its final shape;
+    the base is then counted and left as it is.
+
+    The sequence: snapshot every partition but a stale staging (its
+    rows duplicate sources that were never deleted), stage the fold
+    as ``batch_id=-2``, rename the old base aside, promote the
+    staging, delete the snapshot's sources and the aside.  Source
+    partitions are deleted strictly AFTER the staged fold is durably
+    promoted, and the old base is renamed aside (never deleted) until
+    the new base exists, so no row ever exists solely in driver
+    memory; any kill leaves a combination of copies that an idempotent
+    reader folds to the same answer, and the next call simply refolds
+    it.  A partition the live stream lands after the snapshot is
+    neither consumed nor deleted.
+
+    The staging is a plain parquet write, which creates the directory
+    even for zero rows (a dynamic-partition overwrite of an empty
+    frame writes no partition): a takedown that retracts every row
+    must still promote an empty base.  It keeps the fold's own
+    partitioning, so a corpus-sized compaction writes in parallel."""
     if not os.path.isdir(state_dir):
         return 0
     staging = os.path.join(state_dir, f"batch_id={STAGING_ID}")
     base = os.path.join(state_dir, f"batch_id={BASE_ID}")
     aside = os.path.join(state_dir, f"batch_id={OLD_ID}")
-    # snapshot everything except a stale staging (its bits duplicate
-    # sources that were never deleted — refolding those is enough)
     ids = sorted(
         int(name.split("=", 1)[1])
         for name in os.listdir(state_dir)
         if name.startswith("batch_id=")
         and name != f"batch_id={STAGING_ID}"
     )
-    if not ids or ids == [BASE_ID]:
-        return (
-            spark.read.parquet(state_dir).where(
-                F.col("batch_id") == BASE_ID
-            ).count()
-            if ids
-            else 0
-        )
+    if done(ids):
+        return spark.read.parquet(base).count() if BASE_ID in ids else 0
     shutil.rmtree(staging, ignore_errors=True)
-    folded = (
-        spark.read.parquet(state_dir)
-        .where(F.col("batch_id").isin(ids))
-        .groupBy("word")
-        .agg(F.bit_or("bits").alias("bits"))
-        .withColumn("batch_id", F.lit(STAGING_ID))
-    )
-    overwrite_partitions(folded, state_dir, ["batch_id"])
+    fold(ids).write.mode("overwrite").parquet(staging)
     n = spark.read.parquet(staging).count()
-    # promote: old base aside (its bits are in the staged fold, and
-    # folding the aside alongside stays correct by idempotence until
-    # the deletes below remove it), staged fold in
     if os.path.isdir(base):
         shutil.rmtree(aside, ignore_errors=True)
         os.rename(base, aside)
@@ -748,7 +767,7 @@ def compact_hist(spark: SparkSession, state_dir: str) -> int:
 #   point and a crashed rebuild is recovered by the next
 #   compaction/rebuild's `_resolve_intent`;
 # - the id-keyed/idempotent families (Bloom bit_or, KMV min-k) use
-#   the `compact_bloom` durability sequence — duplicates during the
+#   the `_restate_base` durability sequence — duplicates during the
 #   window cannot corrupt, deletes finish the swap.
 #
 # Horizon contract (the caller's, same as compaction's): the base
@@ -798,43 +817,11 @@ def rebuild_idempotent(
     spark: SparkSession, state_dir: str, state: DataFrame
 ) -> int:
     """Replace an IDEMPOTENT-fold state dir's content with ``state``
-    (rebuilt rows; no batch_id column) — the `compact_bloom`
-    durability sequence with the fold swapped for the external
-    rebuild: stage, promote old base aside, swap staging in, delete
-    the snapshot.  A kill at any point leaves a fold-correct
-    combination (duplicates cannot corrupt bit_or / min-k / distinct
-    readers); the retracted contribution is gone once the deletes
-    finish."""
+    (rebuilt rows; no batch_id column) — `_restate_base` with the
+    fold swapped for the external rebuild.  A kill at any point leaves
+    a fold-correct combination (duplicates cannot corrupt bit_or /
+    min-k / distinct readers); the retracted contribution is gone once
+    the deletes finish, and a rebuild from an empty base promotes an
+    empty base."""
     os.makedirs(state_dir, exist_ok=True)
-    staging = os.path.join(state_dir, f"batch_id={STAGING_ID}")
-    base = os.path.join(state_dir, f"batch_id={BASE_ID}")
-    aside = os.path.join(state_dir, f"batch_id={OLD_ID}")
-    ids = sorted(
-        int(name.split("=", 1)[1])
-        for name in os.listdir(state_dir)
-        if name.startswith("batch_id=")
-        and name != f"batch_id={STAGING_ID}"
-    )
-    shutil.rmtree(staging, ignore_errors=True)
-    # materialize staging with a direct write (like
-    # `_stage_promote_delete`): a plain parquet write creates the
-    # staging directory even for ZERO rows, whereas dynamic-partition
-    # overwrite of an empty frame writes no partition at all — and a
-    # takedown that retracts every document must still promote an
-    # empty base, or the retraction silently never lands and the old
-    # base is left renamed aside
-    state.coalesce(1).write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
-    if os.path.isdir(base):
-        shutil.rmtree(aside, ignore_errors=True)
-        os.rename(base, aside)
-    os.rename(staging, base)
-    for bid in ids:
-        if bid == BASE_ID:
-            continue
-        shutil.rmtree(
-            os.path.join(state_dir, f"batch_id={bid}"),
-            ignore_errors=True,
-        )
-    shutil.rmtree(aside, ignore_errors=True)
-    return n
+    return _restate_base(spark, state_dir, lambda ids: state)

@@ -311,6 +311,34 @@ def test_curation_retraction_equals_filtered_batch(spark, tmp_path):
     )
 
 
+def test_compact_fully_retracted_curation_state(spark, tmp_path):
+    """Retracting every document of a curation table, then compacting:
+    an EMPTY base lands, the tombstones are consumed and the reader
+    returns no rows (a dynamic-partition staging write of the empty
+    fold used to create no staging partition, so the compaction raised
+    and the takedown never became physical)."""
+    import os
+
+    from projetbigdatastreaming_spark.streaming.curation import (
+        compact_curation,
+        read_substring_profile,
+        retract_curation_docs,
+        substring_fp_batch_writer,
+    )
+
+    state = str(tmp_path / "rt_all")
+    substring_fp_batch_writer(state)(
+        spark.createDataFrame([(1, WORDS), (2, OTHER)], SCHEMA), 0
+    )
+    retract_curation_docs(spark, state, [1, 2])
+
+    assert compact_curation(spark, state) == 0
+    parts = [n for n in os.listdir(state) if n.startswith("batch_id=")]
+    assert parts == ["batch_id=-1"], parts
+    assert pending_tombstone_files(state + ".tombstones") == []
+    assert read_substring_profile(spark, state).count() == 0
+
+
 def test_retract_cli(spark, tmp_path):
     """maintain retract-neardup / compact-neardup round-trip through
     the CLI."""

@@ -197,10 +197,13 @@ def test_compact_state_readable_correct_at_kill_points(spark, tmp_path):
 
 
 def test_exact_dedup_screen_cross_batch(spark, tmp_path):
-    """Bloom-accelerated exact dedup: a later batch's copy of an
-    earlier batch's document is confirmed as a duplicate; novel docs
-    are not; within-batch copies are not (batch-vs-corpus semantics);
-    replaying a batch restates its dup partition."""
+    """Exact dedup: a later batch's copy of an earlier batch's
+    document is confirmed as a duplicate; novel docs are not;
+    within-batch copies are not (batch-vs-corpus semantics); replaying
+    a batch restates its dup partition; the fingerprint table is the
+    screen's only state."""
+    import os
+
     from projetbigdatastreaming_spark.streaming.curation import (
         exact_dedup_screen_writer,
     )
@@ -239,6 +242,7 @@ def test_exact_dedup_screen_cross_batch(spark, tmp_path):
     write(b2, 2)
     got2 = {r.doc_id for r in spark.read.parquet(dups).collect()}
     assert got2 == {10, 20}
+    assert os.listdir(state) == ["fps"]
 
 
 def test_benchmark_screen_stream_equals_batch(spark, tmp_path):
